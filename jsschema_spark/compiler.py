@@ -570,10 +570,11 @@ VIOLATION_SCHEMA = T.ArrayType(
 
 
 class TableValidator:
-    """Compile-once validator for a typed table (compile on driver, reuse
-    across every partition — the reference's lazy compile-once cache,
-    validator/validator.go:41-53, without needing the mutex: Spark ships the
-    serialized plan to executors)."""
+    """Compile-once validator for a typed table: the predicates, and (lazily,
+    on first use) the ``valid``/``violations`` Columns, are built once on the
+    driver and reused across DataFrames, threads and every partition — the
+    reference's compile-once cache, validator/validator.go:41-53, without the
+    mutex: Columns are unresolved expressions and Spark ships the plan."""
 
     def __init__(
         self,
@@ -594,9 +595,17 @@ class TableValidator:
 
     # -- columns ---------------------------------------------------------
     def valid_column(self) -> Column:
-        return _and_all([F.coalesce(p.pred, F.lit(False)) for p in self.predicates])
+        return self._valid
 
     def violations_column(self) -> Column:
+        return self._violations
+
+    @functools.cached_property
+    def _valid(self) -> Column:
+        return _and_all([F.coalesce(p.pred, F.lit(False)) for p in self.predicates])
+
+    @functools.cached_property
+    def _violations(self) -> Column:
         if not self.predicates:
             return F.array().cast(VIOLATION_SCHEMA)
         entries = [
@@ -617,10 +626,10 @@ class TableValidator:
         self, df: DataFrame, with_violations: bool = True,
         valid_col: str = "valid", violations_col: str = "violations",
     ) -> DataFrame:
-        out = df.withColumn(valid_col, self.valid_column())
+        cols = {valid_col: self._valid}
         if with_violations:
-            out = out.withColumn(violations_col, self.violations_column())
-        return out
+            cols[violations_col] = self._violations
+        return df.withColumns(cols)
 
     def violation_details(self, df: DataFrame, id_cols: Optional[list[str]] = None) -> DataFrame:
         """Exploded per-violation detail rows (north_rule's detail records)."""

@@ -569,7 +569,10 @@ def flac_encode(
 
     Deterministic (pure function of input), bit-exact round-trip with
     :func:`flac_decode`; real compression via fixed/LPC prediction +
-    Rice coding."""
+    Rice coding. ``block_size`` must fit STREAMINFO's 16-bit block-size
+    fields and the format's 16-sample minimum (16..65535)."""
+    if not 16 <= block_size <= 65535:
+        raise ValueError(f"block_size must be in 16..65535, got {block_size}")
     x = np.asarray(pcm)
     if x.dtype != np.int16:
         x = x.astype(np.int16)

@@ -11,12 +11,14 @@ Design:
 * The unit of resumability is a **stable hash bucket** of the id column
   (``pmod(xxhash64(id), n_buckets)``) — stable across cluster sizes, retries
   and input re-splits, unlike ``spark_partition_id``.
-* Buckets are processed in chunks; each chunk is one Spark job that writes
-  its violation/valid output partitioned by bucket, then appends one
-  manifest JSON-lines file through a pluggable ``ManifestStorage`` whose
-  write is all-or-nothing (local: temp+rename; object store: single PUT —
-  rename-free, since object-store rename is copy+delete, not atomic), so a
-  kill mid-append never leaves a half-recorded chunk.
+* Buckets are processed in chunks; each chunk is ONE Spark job: it writes
+  the violation/valid output partitioned by bucket, and the per-bucket
+  row/valid counts are observed metrics of that write (``DataFrame.observe``)
+  — the output is never read back. It then appends one manifest JSON-lines
+  file through a pluggable ``ManifestStorage`` whose write is all-or-nothing
+  (local: temp+rename; object store: single PUT — rename-free, since
+  object-store rename is copy+delete, not atomic), so a kill mid-append
+  never leaves a half-recorded chunk.
 * On restart, completed buckets are anti-filtered BEFORE the scan predicate
   (`bucket IN (pending)`), so Spark skips whole partitions of work; the
   output directory is idempotent per bucket (dynamic partition overwrite).
@@ -31,10 +33,10 @@ import json
 import os
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 import jsschema_spark
@@ -189,12 +191,14 @@ class ResumableValidation:
         after N chunks (kill-and-resume testing). Resume only skips buckets
         whose manifest record matches the current input lineage + engine
         version — changed input re-validates."""
-        lineage = sorted(df.inputFiles()) if df.inputFiles() else []
+        lineage = sorted(df.inputFiles())
         pending = self.pending_buckets(lineage=lineage)
         results: list[BucketResult] = []
         spark = df.sparkSession
         prev_overwrite = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        bucket = F.col("__bucket")
+        bucketed = df.withColumn("__bucket", bucket_col(self.id_col, self.n_buckets))
         try:
             chunks = [
                 pending[i : i + self.buckets_per_job]
@@ -204,45 +208,30 @@ class ResumableValidation:
                 if fail_after_chunks is not None and ci >= fail_after_chunks:
                     raise RuntimeError("injected failure for resume test")
                 t0 = time.time()
-                bcol = bucket_col(self.id_col, self.n_buckets)
-                part = df.withColumn("__bucket", bcol).where(F.col("__bucket").isin(chunk))
-                applied = self.validator.apply(part, with_violations=True)
+                part = bucketed.where(bucket.isin(chunk))
+                counts = [F.count_if(bucket == b).alias(f"rows_{b}") for b in chunk] + [
+                    F.count_if((bucket == b) & F.col("valid")).alias(f"valid_{b}") for b in chunk
+                ]
+                applied = self.validator.apply(part, with_violations=bool(self.output_dir))
                 if self.output_dir:
-                    applied.write.mode("overwrite").partitionBy("__bucket").parquet(self.output_dir)
-                    stats_src = part.sparkSession.read.parquet(self.output_dir).where(
-                        F.col("__bucket").isin(chunk)
-                    )
+                    obs = Observation()
+                    writer = applied.observe(obs, *counts).write.mode("overwrite")
+                    writer.partitionBy("__bucket").parquet(self.output_dir)
+                    stats = obs.get
                 else:
-                    stats_src = applied
-                per_bucket = {
-                    r["__bucket"]: r
-                    for r in stats_src.groupBy("__bucket")
-                    .agg(
-                        F.count(F.lit(1)).alias("n_rows"),
-                        F.sum(F.col("valid").cast("long")).alias("n_valid"),
-                    )
-                    .collect()
-                }
-                wall = time.time() - t0
-                records = []
-                for b in chunk:
-                    r = per_bucket.get(b)
-                    n_rows = r["n_rows"] if r else 0
-                    n_valid = int(r["n_valid"]) if r and r["n_valid"] is not None else 0
-                    results.append(BucketResult(b, n_rows, n_valid, wall / len(chunk)))
-                    records.append(
-                        {
-                            "bucket": b,
-                            "status": "done",
-                            "n_rows": n_rows,
-                            "n_valid": n_valid,
-                            "wall_s": round(wall / len(chunk), 4),
-                            "input_files": lineage,
-                            "engine_version": jsschema_spark.__version__,
-                            "ts": time.time(),
-                        }
-                    )
-                self.manifest.append(records)
+                    stats = applied.agg(*counts).first()
+                wall_s = (time.time() - t0) / len(chunk)
+                done = [
+                    BucketResult(b, stats[f"rows_{b}"], stats[f"valid_{b}"], wall_s)
+                    for b in chunk
+                ]
+                results.extend(done)
+                self.manifest.append([
+                    {**asdict(r), "wall_s": round(wall_s, 4), "status": "done",
+                     "input_files": lineage, "engine_version": jsschema_spark.__version__,
+                     "ts": time.time()}
+                    for r in done
+                ])
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_overwrite)
         return results

@@ -877,12 +877,13 @@ def start_transcode_sink(
         enc = batch_df.select(
             F.col(id_col),
             F.col(codec_col).alias("orig_codec"),
-            F.col(bytes_col).alias("__orig"),
+            F.length(bytes_col).cast("long").alias("orig_bytes"),
             _transcode(F.col(codec_col), F.col(bytes_col)).alias("__t"),
         )
         # The CPU-bound decode->re-encode UDF feeds BOTH writes below;
         # without a persist each write re-executes it over the whole
-        # micro-batch, doubling per-batch transcode cost.
+        # micro-batch, doubling per-batch transcode cost. Only the original
+        # payload's length is cached, not the payload itself.
         enc = enc.persist()
         try:
             archived = enc.where(F.col("__t.ok")).select(
@@ -890,13 +891,13 @@ def start_transcode_sink(
                 F.lit(target_codec).alias("codec"),
                 F.col("__t.bytes").alias("bytes"),
                 "orig_codec",
-                F.length("__orig").cast("long").alias("orig_bytes"),
+                "orig_bytes",
                 F.length("__t.bytes").cast("long").alias("out_bytes"),
             )
             quarantined = enc.where(~F.col("__t.ok")).select(
                 F.col(id_col), "orig_codec",
                 F.col("__t.reason").alias("reason"),
-                F.length("__orig").cast("long").alias("orig_bytes"),
+                "orig_bytes",
             )
             archived.write.mode("overwrite").parquet(
                 f"{archived_dir}/batch_id={bid}"

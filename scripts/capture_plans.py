@@ -13,6 +13,10 @@ import sys
 
 
 def main() -> None:
+    if len(sys.argv) < 3 or sys.argv[1] not in ("before", "after"):
+        print("usage: python scripts/capture_plans.py {before|after} q1 [q2 ...]",
+              file=sys.stderr)
+        sys.exit(2)
     suffix = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

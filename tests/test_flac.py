@@ -81,6 +81,17 @@ def test_wasted_bits_and_blocksizes():
         _roundtrip(rng.integers(-2000, 2000, 5000).astype(np.int16), block_size=bs)
 
 
+def test_block_size_outside_streaminfo_range_rejected():
+    """STREAMINFO stores the block size in 16-bit fields and the format's
+    minimum is 16 samples: out-of-range sizes raise instead of wrapping."""
+    pcm = np.arange(-3000, 3000, 7, dtype=np.int16)
+    for bs in (0, 15, 65536, 1 << 20):
+        with pytest.raises(ValueError, match="block_size"):
+            flac_encode(pcm, 16000, block_size=bs)
+    for bs in (16, 65535):
+        _roundtrip(pcm, block_size=bs)
+
+
 def test_stream_info():
     pcm = np.arange(-500, 500, dtype=np.int16)
     info = flac_stream_info(flac_encode(pcm, 44100))

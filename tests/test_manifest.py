@@ -53,6 +53,65 @@ def test_kill_and_resume(spark, tmp_path):
     assert n_valid_manifest == n_valid_direct
 
 
+def test_manifest_counts_equal_committed_output(spark, tmp_path):
+    """The per-bucket counts come from the write's observed metrics, not a
+    re-read; they must still equal what the output directory holds."""
+    src = str(tmp_path / "src")
+    clips_table(spark, 3000, with_audio=False).write.parquet(src)
+    df = spark.read.parquet(src)
+    tv = TableValidator(parse_schema(CLIPS_DRAFT04_SCHEMA), df.schema)
+    odir = str(tmp_path / "out")
+    ResumableValidation(tv, str(tmp_path / "m"), odir, n_buckets=8, buckets_per_job=3).run(df)
+
+    committed = {
+        r["__bucket"]: (r["n_rows"], r["n_valid"])
+        for r in spark.read.parquet(odir).groupBy("__bucket").agg(
+            F.count(F.lit(1)).alias("n_rows"), F.count_if("valid").alias("n_valid")
+        ).collect()
+    }
+    recs = Manifest(str(tmp_path / "m")).records()
+    recorded = {r["bucket"]: (r["n_rows"], r["n_valid"]) for r in recs}
+    assert recorded == committed
+    assert 0 < sum(v for _, v in recorded.values()) < 3000  # both valid and invalid rows
+
+
+@pytest.mark.parametrize("with_output", [True, False])
+def test_bucket_without_rows_is_recorded_empty(spark, tmp_path, with_output):
+    df = clips_table(spark, 3, with_audio=False)
+    tv = TableValidator(parse_schema(CLIPS_DRAFT04_SCHEMA), df.schema)
+    odir = str(tmp_path / "out") if with_output else None
+    results = ResumableValidation(tv, str(tmp_path / "m"), odir, n_buckets=16,
+                                  buckets_per_job=5).run(df)
+    recs = Manifest(str(tmp_path / "m")).records()
+    assert sorted(r["bucket"] for r in recs) == list(range(16))
+    assert sum(r["n_rows"] for r in recs) == 3
+    empty = [r for r in recs if r["n_rows"] == 0]
+    assert len(empty) >= 13 and all(r["n_valid"] == 0 for r in empty)
+    assert {(r.bucket, r.n_rows, r.n_valid) for r in results} == {
+        (r["bucket"], r["n_rows"], r["n_valid"]) for r in recs
+    }
+
+
+def test_one_spark_job_per_chunk(spark, tmp_path):
+    """With an output directory, a chunk's counts ride on its write job: no
+    read-back of the output and no separate aggregation job."""
+    src = str(tmp_path / "src")
+    clips_table(spark, 1000, with_audio=False).write.parquet(src)
+    df = spark.read.parquet(src)
+    tv = TableValidator(parse_schema(CLIPS_DRAFT04_SCHEMA), df.schema)
+    run = ResumableValidation(tv, str(tmp_path / "m"), str(tmp_path / "out"),
+                              n_buckets=8, buckets_per_job=2)
+    sc = spark.sparkContext
+    sc.setJobGroup("resumable-one-job-per-chunk", "resumable run")
+    try:
+        run.run(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("resumable-one-job-per-chunk")) == 4
+
+
 def test_rerun_is_noop(spark, tmp_path):
     df = clips_table(spark, 500, with_audio=False)
     tv = TableValidator(parse_schema(CLIPS_DRAFT04_SCHEMA), df.schema)

@@ -59,6 +59,26 @@ def test_clips_flagship_validation(spark):
     assert kw["clip-000000000007"] == ["required"]
 
 
+def test_validator_columns_built_once(spark):
+    df = clips_df(spark)
+    tv = TableValidator(parse_schema(CLIPS_SCHEMA), df.schema)
+    tv.summary(df).collect()
+    assert "_valid" not in vars(tv) and "_violations" not in vars(tv)  # lazy
+    assert tv.valid_column() is tv.valid_column()
+    assert tv.violations_column() is tv.violations_column()
+
+    out = tv.apply(df)
+    assert out.columns == df.columns + ["valid", "violations"]
+    assert tv.apply(df, with_violations=False).columns == df.columns + ["valid"]
+    rows = out.orderBy("clip_id").collect()
+    assert [r.clip_id for r in rows if r.valid] == ["clip-000000000001"]
+    assert all(r.valid == (not r.violations) for r in rows)
+    # the shared Columns resolve against any DataFrame with the same schema
+    other = df.where(F.col("codec") == "flac").select(*df.columns)
+    again = {r.clip_id: r for r in tv.apply(other).collect()}
+    assert again == {r.clip_id: r for r in rows if r.codec == "flac"}
+
+
 def test_violation_details_and_summary(spark):
     df = clips_df(spark)
     tv = TableValidator(parse_schema(CLIPS_SCHEMA), df.schema)
