@@ -748,11 +748,15 @@ def t_closeness_report(
     glob = glob.withColumn("__N", F.sum("__vn").over(Window.partitionBy()))
     grid = groups.crossJoin(F.broadcast(glob))  # groups × values, both tiny
     # rename before joining: grid shares pairs' lineage, so a bare __n
-    # would resolve ambiguously against the self-referenced aggregates
+    # would resolve ambiguously against the self-referenced aggregates.
+    # Null-safe keys: a group whose quasi-identifier is null keeps its pairs
+    keys = [f"__k{i}" for i in range(len(quasi_cols))]
     pair_n = pairs.select(
-        *quasi_cols, "__v", F.col("__n").alias("__pair_n")
+        *[F.col(c).alias(k) for c, k in zip(quasi_cols, keys)],
+        F.col("__v").alias("__kv"), F.col("__n").alias("__pair_n"),
     )
-    j = grid.join(pair_n, [*quasi_cols, "__v"], "left").withColumn(
+    on = [F.col(c).eqNullSafe(F.col(k)) for c, k in zip(quasi_cols, keys)]
+    j = grid.join(pair_n, on + [F.col("__v") == F.col("__kv")], "left").withColumn(
         "__pg", F.coalesce(F.col("__pair_n"), F.lit(0)) / F.col("__gn")
     ).withColumn("__p", F.col("__vn") / F.col("__N"))
     if ordered:

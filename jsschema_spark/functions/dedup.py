@@ -194,19 +194,17 @@ def minhash_signatures(
     num_hashes: int = 64,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """``(doc_id, sig)`` signatures via explode + ``num_hashes`` min
-    aggregates — the whole-stage-codegen formulation of
+    """``(doc_id, sig)`` signatures, the batch formulation of
     ``minhash_signature`` (same values).
 
     Catalyst does not codegen higher-order functions, so the Column-level
     fold evaluates ~num_hashes interpreted expressions per shingle (~1 ms
-    per document measured). This shape keeps everything in codegen: one
-    xxhash64 per shingle (CSE in the projection), 64 multiply-adds, then a
-    hash aggregate whose map-side combine collapses each doc's shingles
-    BEFORE the shuffle — shuffle volume is one ~520-byte row per document,
-    independent of document length. ~10× faster at 5k docs; the gap widens
-    with corpus size. Docs with no shingles produce no row (the Column
-    version yields null)."""
+    per document measured). Here shingles are exploded and hashed once each
+    in the JVM (codegen ``xxhash64``); the ``num_hashes`` lanes and the
+    per-document minimum then run as one NumPy matrix op per Arrow batch
+    (``mapInPandas``), and a final ``groupBy(doc_id)`` least-fold merges the
+    few per-batch partials of a document. Docs with no shingles produce no
+    row (the Column version yields null)."""
     import numpy as np
     import pandas as pd
 

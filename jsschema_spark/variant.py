@@ -3,14 +3,19 @@
 The third execution tier, between the typed-column compiler (static types)
 and the pandas-UDF fallback (full draft-04): arbitrary JSON **text** columns
 validated entirely inside Catalyst — ``try_parse_json`` once, then
-``try_variant_get`` / ``schema_of_variant`` / ``is_variant_null`` predicates.
-No Python in the row path, whole-stage codegen, ~10-100× the UDF path's
-throughput on flat event schemas (the common case: JSON event streams).
+``try_variant_get`` / ``schema_of_variant`` predicates. No Python in the row
+path, whole-stage codegen, ~10-100× the UDF path's throughput on flat event
+schemas (the common case: JSON event streams).
 
-Dynamic-type semantics (draft-04, pinned by the corpus):
+Keywords are lowered by the same walker as the typed tier
+(``jsschema_spark.compiler._Compiler``); this module supplies only its
+Variant view (``_VariantView``), which decides the type test, the guard and
+how values are read:
 
 * ``schema_of_variant`` names the JSON type: BIGINT (int), DECIMAL(p,s) /
   DOUBLE (number), STRING, BOOLEAN, VOID (null), ARRAY<...>, OBJECT<...>.
+  Type tests never fold, so every type-specific keyword is guarded by
+  ``when(test, p).otherwise(True)``.
 * ``integer`` accepts BIGINT and any numeric whose value has no fraction
   (3.0 passes, 3.14 fails) — value check via double == floor(double).
 * ``try_variant_get(v, path, "long")`` COERCES ("42" → 42), so type checks
@@ -18,40 +23,36 @@ Dynamic-type semantics (draft-04, pinned by the corpus):
 * key missing ⇒ SQL NULL variant; key present with JSON null ⇒ VOID variant
   (non-null) — exactly draft-04's present-vs-null distinction, so
   ``required`` is ``try_variant_get(...).isNotNull()``.
+* Objects are read like a typed ``MapType``: key-set keywords
+  (patternProperties, additionalProperties, property counts) and arbitrary
+  property names (dots, quotes, spaces — names a ``$.name`` variant path
+  would misparse) go through ``try_variant_get(v, "$",
+  "map<string,variant>")``, one JVM-side cast per object level. Arrays go
+  through the ``array<variant>`` cast.
 
-Key-set keywords (patternProperties, additionalProperties, property counts)
-and arbitrary property names (dots, quotes, spaces — names a ``$.name``
-variant path would misparse) go through ``try_variant_get(v, "$",
-"map<string,variant>")``: one JVM-side cast per object level, then ordinary
-``map_keys``/``map_entries``/``element_at`` predicates. Tuple-mode items and
-additionalItems use the ``array<variant>`` cast + ``element_at``/``slice``.
-
-Non-recursive ``$ref`` inlines at compile time through the same resolver
-the typed compiler uses (definitions + meta-/hyper-schema providers).
-``try_compile`` returns None only for schemas Variant genuinely can't
-express statically: RECURSIVE ``$ref`` (unbounded unrolling) and non-scalar
-enum members (canonical-JSON equality differs from the Python core's) —
-callers fall back to the Arrow pandas-UDF path (``validate_json_auto``).
+Non-recursive ``$ref`` inlines at compile time through the shared resolver,
+under the walker's one nesting cap. ``try_compile`` returns None only for
+schemas Variant genuinely can't express statically: RECURSIVE ``$ref``
+(unbounded unrolling) and non-scalar enum members (canonical-JSON equality
+differs from the Python core's) — callers fall back to the Arrow pandas-UDF
+path (``validate_json_auto``).
 """
 
 from __future__ import annotations
 
 import functools
 import json
-import operator
 import re
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from jsschema_spark.compiler import _FORMAT_RLIKE, CompiledPredicate, _and_all, _or_all
-from jsschema_spark.schema import FORBIDDEN, SchemaNode, parse_schema
-
-
-class _Unsupported(Exception):
-    pass
-
+from jsschema_spark.compiler import (
+    CompiledPredicate, CompileError, Test, _absent_ok, _CompiledColumns, _Compiler, _or_all,
+)
+from jsschema_spark.resolver import RefResolver
+from jsschema_spark.schema import SchemaNode, parse_schema
 
 _NUMERIC_PREFIXES = ("BIGINT", "DOUBLE", "FLOAT", "DECIMAL")
 
@@ -59,446 +60,113 @@ _NUMERIC_PREFIXES = ("BIGINT", "DOUBLE", "FLOAT", "DECIMAL")
 # (dots, brackets, quotes, spaces, unicode) goes through the map cast
 _SIMPLE_NAME = re.compile(r"^[A-Za-z0-9_]+$")
 
-
-def _vtype(v: Column) -> Column:
-    return F.schema_of_variant(v)
-
-
-def _is_numeric(t: Column) -> Column:
-    return _or_all([t.startswith(p) for p in _NUMERIC_PREFIXES])
+# the validator compiles over this column; ``apply`` binds it to the input
+_DOC = "__jsv_doc"
 
 
-def _as_double(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "double")
+class _VariantView:
+    """A (possibly SQL-NULL) variant value: runtime type tests, values read
+    with ``try_variant_get``."""
+
+    jtype = None  # no static JSON type
+
+    def __init__(self, col: Column):
+        self.col = col
+
+    @functools.cached_property
+    def _t(self) -> Column:
+        return F.schema_of_variant(self.col)
+
+    def is_(self, t: str) -> Test:
+        if t in ("number", "integer"):
+            numeric = _or_all([self._t.startswith(p) for p in _NUMERIC_PREFIXES])
+            if t == "number":
+                return numeric
+            d = self.number()
+            return numeric & (d == F.floor(d))
+        if t in ("array", "object"):
+            return self._t.startswith(t.upper())
+        return self._t == {"string": "STRING", "boolean": "BOOLEAN", "null": "VOID"}[t]
+
+    type_test = is_
+
+    def number(self) -> Column:
+        return F.try_variant_get(self.col, "$", "double")
+
+    def string(self) -> Column:
+        return F.try_variant_get(self.col, "$", "string")
+
+    def boolean(self) -> Column:
+        return F.try_variant_get(self.col, "$", "boolean")
+
+    def canonical(self) -> Column:
+        raise CompileError("non-scalar enum member on the Variant tier")
+
+    def elems(self) -> Column:
+        return F.try_variant_get(self.col, "$", "array<variant>")
+
+    def unique_keys(self) -> Column:
+        return F.transform(self.elems(), lambda e: F.to_json(e))
+
+    def member(self, x: Column) -> "_VariantView":
+        return _VariantView(x)
+
+    def fields(self) -> None:
+        return None  # the key set is dynamic
+
+    @functools.cached_property
+    def _entries(self) -> Column:
+        return F.try_variant_get(self.col, "$", "map<string,variant>")
+
+    def entries(self) -> Column:
+        return self._entries
+
+    def child(self, name: str) -> "_VariantView":
+        # plain names use a direct `$.name` path (no map cast); a name with
+        # '.', '[', quotes or spaces would silently change that lookup
+        if _SIMPLE_NAME.match(name):
+            return _VariantView(F.try_variant_get(self.col, f"$.{name}", "variant"))
+        return _VariantView(F.element_at(self._entries, F.lit(name)))
+
+    def has(self, name: str) -> Column:
+        return self.child(name).col.isNotNull()
 
 
-def _as_string(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "string")
-
-
-def _type_test(declared: str, v: Column, t: Column) -> Column:
-    if declared == "integer":
-        d = _as_double(v)
-        return _is_numeric(t) & (d == F.floor(d))
-    if declared == "number":
-        return _is_numeric(t)
-    if declared == "string":
-        return t == "STRING"
-    if declared == "boolean":
-        return t == "BOOLEAN"
-    if declared == "null":
-        return t == "VOID"
-    if declared == "array":
-        return t.startswith("ARRAY")
-    if declared == "object":
-        return t.startswith("OBJECT")
-    raise _Unsupported(f"type {declared!r}")
-
-
-class _VariantCompiler:
-    def __init__(self, enforce_formats: bool = True, max_depth: int = 8, resolver=None):
-        self.enforce_formats = enforce_formats
-        self.max_depth = max_depth
-        self.resolver = resolver
-
-    def compile(self, s: SchemaNode, v: Column, path: str, depth: int = 0) -> list[CompiledPredicate]:
-        """Predicates over a non-null variant ``v`` (present value)."""
-        if depth > self.max_depth:
-            raise _Unsupported("nesting too deep")
-        if s.ref:
-            # compile-time inlining, like the typed compiler: non-recursive
-            # $refs (definitions, meta-/hyper-schema providers) expand in
-            # place; a recursive chain blows the depth cap above and falls
-            # back to the pandas tier
-            if self.resolver is None:
-                raise _Unsupported("$ref with no resolver")
-            from jsschema_spark.errors import ResolutionError
-
-            try:
-                target = self.resolver.resolve_node(s)
-            except ResolutionError as e:
-                raise _Unsupported(str(e)) from None
-            return self.compile(target, v, path, depth + 1)
-
-        preds: list[CompiledPredicate] = []
-        t = _vtype(v)
-
-        if s.types:
-            tests = [_type_test(d, v, t) for d in s.types]
-            preds.append(
-                CompiledPredicate(path, "type", _or_all(tests), f"expected {s.types}")
-            )
-
-        if s.enum is not None:
-            branches = []
-            strs = [e for e in s.enum if isinstance(e, str)]
-            nums = [float(e) for e in s.enum if isinstance(e, (int, float)) and not isinstance(e, bool)]
-            bools = [e for e in s.enum if isinstance(e, bool)]
-            has_null = any(e is None for e in s.enum)
-            if any(isinstance(e, (list, dict)) for e in s.enum):
-                raise _Unsupported("non-scalar enum")
-            if strs:
-                branches.append((t == "STRING") & _as_string(v).isin(*strs))
-            if nums:
-                branches.append(_is_numeric(t) & _as_double(v).isin(*nums))
-            if bools:
-                branches.append(
-                    (t == "BOOLEAN") & F.try_variant_get(v, "$", "boolean").isin(*bools)
-                )
-            if has_null:
-                branches.append(t == "VOID")
-            preds.append(CompiledPredicate(path, "enum", _or_all(branches), "value not in enum"))
-
-        # numeric keywords apply only to numeric values (vacuous otherwise)
-        num_guard = _is_numeric(t)
-        d = _as_double(v)
-        if s.multiple_of is not None and s.multiple_of != 0:
-            q = d / F.lit(float(s.multiple_of))
-            # ulp-scaled tolerance (double spacing exceeds 1e-9 above ~2^30);
-            # kept in lockstep with compiler.py / pyvalidate.py
-            mp_ok = F.abs(q - F.round(q)) < F.greatest(F.lit(1e-9), F.abs(q) * F.lit(1e-14))
-            preds.append(
-                CompiledPredicate(
-                    path, "multipleOf",
-                    F.when(num_guard, mp_ok).otherwise(F.lit(True)),
-                    f"not a multiple of {s.multiple_of}",
-                )
-            )
-        if s.minimum is not None:
-            cmp = (d > s.minimum) if s.exclusive_minimum else (d >= s.minimum)
-            kw = "exclusiveMinimum" if s.exclusive_minimum else "minimum"
-            preds.append(
-                CompiledPredicate(path, kw, F.when(num_guard, cmp).otherwise(F.lit(True)), f"below {s.minimum}")
-            )
-        if s.maximum is not None:
-            cmp = (d < s.maximum) if s.exclusive_maximum else (d <= s.maximum)
-            kw = "exclusiveMaximum" if s.exclusive_maximum else "maximum"
-            preds.append(
-                CompiledPredicate(path, kw, F.when(num_guard, cmp).otherwise(F.lit(True)), f"above {s.maximum}")
-            )
-
-        # string keywords apply only to strings
-        str_guard = t == "STRING"
-        sv = _as_string(v)
-        if s.min_length is not None:
-            preds.append(
-                CompiledPredicate(
-                    path, "minLength",
-                    F.when(str_guard, F.length(sv) >= s.min_length).otherwise(F.lit(True)),
-                    f"shorter than {s.min_length}",
-                )
-            )
-        if s.max_length is not None:
-            preds.append(
-                CompiledPredicate(
-                    path, "maxLength",
-                    F.when(str_guard, F.length(sv) <= s.max_length).otherwise(F.lit(True)),
-                    f"longer than {s.max_length}",
-                )
-            )
-        if s.pattern is not None:
-            preds.append(
-                CompiledPredicate(
-                    path, "pattern",
-                    F.when(str_guard, sv.rlike(s.pattern.pattern)).otherwise(F.lit(True)),
-                    f"does not match {s.pattern.pattern!r}",
-                )
-            )
-        if s.format and self.enforce_formats and s.format in _FORMAT_RLIKE:
-            p = sv.rlike(_FORMAT_RLIKE[s.format])
-            if s.format == "ipv6":
-                p = p & sv.contains(":")
-            preds.append(
-                CompiledPredicate(path, "format", F.when(str_guard, p).otherwise(F.lit(True)),
-                                  f"not a valid {s.format}")
-            )
-
-        # arrays
-        arr_guard = t.startswith("ARRAY")
-        if (
-            s.min_items is not None or s.max_items is not None
-            or s.items is not None or s.unique_items
-            or s.additional_items is FORBIDDEN or isinstance(s.additional_items, SchemaNode)
-        ):
-            elems = F.try_variant_get(v, "$", "array<variant>")
-            if s.min_items is not None:
-                preds.append(
-                    CompiledPredicate(
-                        path, "minItems",
-                        F.when(arr_guard, F.size(elems) >= s.min_items).otherwise(F.lit(True)),
-                        f"fewer than {s.min_items} items",
-                    )
-                )
-            if s.max_items is not None:
-                preds.append(
-                    CompiledPredicate(
-                        path, "maxItems",
-                        F.when(arr_guard, F.size(elems) <= s.max_items).otherwise(F.lit(True)),
-                        f"more than {s.max_items} items",
-                    )
-                )
-            if s.unique_items:
-                canon = F.transform(elems, lambda e: F.to_json(e))
-                preds.append(
-                    CompiledPredicate(
-                        path, "uniqueItems",
-                        F.when(arr_guard, F.size(F.array_distinct(canon)) == F.size(canon)).otherwise(F.lit(True)),
-                        "duplicate elements",
-                    )
-                )
-            if s.items is not None and not s.items.tuple_mode:
-                sub = s.items.schemas[0]
-                sub_preds_fn = self._value_pred_fn(sub, f"{path}[*]", depth + 1)
-                preds.append(
-                    CompiledPredicate(
-                        path, "items",
-                        F.when(arr_guard, F.forall(elems, sub_preds_fn)).otherwise(F.lit(True)),
-                        "element violates item schema",
-                    )
-                )
-            elif s.items is not None and s.items.tuple_mode:
-                arity = len(s.items.schemas)
-                for i, sub in enumerate(s.items.schemas):
-                    e = F.element_at(elems, i + 1)
-                    inner = F.when(e.isNull(), F.lit(True)).otherwise(
-                        self._value_pred(sub, e, f"{path}[{i}]", depth + 1)
-                    )
-                    preds.append(
-                        CompiledPredicate(
-                            f"{path}[{i}]", "items",
-                            F.when(arr_guard & (F.size(elems) > i), inner).otherwise(F.lit(True)),
-                            "tuple element violates item schema",
-                        )
-                    )
-                if s.additional_items is FORBIDDEN:
-                    preds.append(
-                        CompiledPredicate(
-                            path, "additionalItems",
-                            F.when(arr_guard, F.size(elems) <= arity).otherwise(F.lit(True)),
-                            f"more than tuple arity {arity} items",
-                        )
-                    )
-                elif isinstance(s.additional_items, SchemaNode):
-                    extra_fn = self._value_pred_fn(s.additional_items, f"{path}[*]", depth + 1)
-                    preds.append(
-                        CompiledPredicate(
-                            path, "additionalItems",
-                            F.when(
-                                arr_guard,
-                                F.forall(F.slice(elems, arity + 1, 2_147_483_647 - arity), extra_fn),
-                            ).otherwise(F.lit(True)),
-                            "additional element violates schema",
-                        )
-                    )
-
-        # objects — key-set keywords and non-identifier property names go
-        # through one map<string,variant> cast per level; plain names use
-        # direct `$.name` variant paths (no cast). A name with '.', '[',
-        # quotes or spaces would silently change a `$.name` lookup, so those
-        # ALWAYS take the map route (never a mangled path).
-        obj_guard = t.startswith("OBJECT")
-        obj_map = F.try_variant_get(v, "$", "map<string,variant>")
-
-        def child_of(name: str) -> Column:
-            if _SIMPLE_NAME.match(name):
-                return F.try_variant_get(v, f"$.{name}", "variant")
-            return F.element_at(obj_map, F.lit(name))
-
-        for req in s.required:
-            preds.append(
-                CompiledPredicate(
-                    f"{path}.{req}", "required",
-                    F.when(obj_guard, child_of(req).isNotNull()).otherwise(F.lit(True)),
-                    f"missing required property {req!r}",
-                )
-            )
-        for name, sub in s.properties.items():
-            child = child_of(name)
-            for cp in self.compile(sub, child, f"{path}.{name}", depth + 1):
-                preds.append(
-                    CompiledPredicate(
-                        cp.path, cp.keyword,
-                        F.when(child.isNull(), F.lit(True)).otherwise(
-                            F.coalesce(cp.pred, F.lit(False))
-                        ),
-                        cp.message,
-                    )
-                )
-        for src, (rx, sub) in s.pattern_properties.items():
-            sub_fn = self._value_pred_fn(sub, f"{path}.<{src}>", depth + 1)
-
-            # closure factory, NOT default-arg capture: pyspark HOFs build
-            # the lambda from the function's parameter count, so extra
-            # defaulted params would become lambda variables
-            def make_entry_ok(_src, _fn):
-                def entry_ok(e: Column) -> Column:
-                    return F.when(~e.getField("key").rlike(_src), F.lit(True)).otherwise(
-                        _fn(e.getField("value"))
-                    )
-
-                return entry_ok
-
-            entry_ok = make_entry_ok(src, sub_fn)
-            preds.append(
-                CompiledPredicate(
-                    path, "patternProperties",
-                    F.when(obj_guard, F.forall(F.map_entries(obj_map), entry_ok)).otherwise(F.lit(True)),
-                    f"patternProperties {src!r} violated",
-                )
-            )
-        if s.additional_properties is FORBIDDEN or isinstance(s.additional_properties, SchemaNode):
-            known = list(s.properties)
-            rxs = list(s.pattern_properties)
-
-            def key_known(k: Column) -> Column:
-                ok = k.isin(*known) if known else F.lit(False)
-                for srcp in rxs:
-                    ok = ok | k.rlike(srcp)
-                return ok
-
-            if s.additional_properties is FORBIDDEN:
-                p = F.forall(F.map_keys(obj_map), key_known)
-            else:
-                extra_fn = self._value_pred_fn(s.additional_properties, f"{path}.<additional>", depth + 1)
-                p = F.forall(
-                    F.map_entries(obj_map),
-                    lambda e: key_known(e.getField("key")) | extra_fn(e.getField("value")),
-                )
-            preds.append(
-                CompiledPredicate(
-                    path, "additionalProperties",
-                    F.when(obj_guard, p).otherwise(F.lit(True)),
-                    "unexpected properties",
-                )
-            )
-        if s.min_properties is not None:
-            preds.append(
-                CompiledPredicate(
-                    path, "minProperties",
-                    F.when(obj_guard, F.size(obj_map) >= s.min_properties).otherwise(F.lit(True)),
-                    f"fewer than {s.min_properties} properties",
-                )
-            )
-        if s.max_properties is not None:
-            preds.append(
-                CompiledPredicate(
-                    path, "maxProperties",
-                    F.when(obj_guard, F.size(obj_map) <= s.max_properties).otherwise(F.lit(True)),
-                    f"more than {s.max_properties} properties",
-                )
-            )
-        for pname, deplist in s.dep_names.items():
-            has = child_of(pname).isNotNull()
-            for dep in deplist:
-                preds.append(
-                    CompiledPredicate(
-                        path, "dependencies",
-                        F.when(obj_guard & has, child_of(dep).isNotNull()).otherwise(F.lit(True)),
-                        f"{pname!r} requires {dep!r}",
-                    )
-                )
-        for pname, dschema in s.dep_schemas.items():
-            inner = self._value_pred(dschema, v, path, depth + 1)
-            preds.append(
-                CompiledPredicate(
-                    path, "dependencies",
-                    F.when(obj_guard & child_of(pname).isNotNull(), inner).otherwise(F.lit(True)),
-                    f"{pname!r} schema dependency violated",
-                )
-            )
-
-        # combinators
-        for sub in s.all_of:
-            preds.extend(self.compile(sub, v, path, depth + 1))
-        if s.any_of:
-            branches = [self._value_pred(b, v, path, depth + 1) for b in s.any_of]
-            preds.append(CompiledPredicate(path, "anyOf", _or_all(branches), "no branch matched"))
-        if s.one_of:
-            branches = [self._value_pred(b, v, path, depth + 1) for b in s.one_of]
-            hits = functools.reduce(
-                operator.add, [F.when(b, F.lit(1)).otherwise(F.lit(0)) for b in branches]
-            )
-            preds.append(CompiledPredicate(path, "oneOf", hits == 1, "not exactly one branch matched"))
-        if s.not_ is not None:
-            preds.append(
-                CompiledPredicate(path, "not", ~self._value_pred(s.not_, v, path, depth + 1),
-                                  "matched forbidden schema")
-            )
-        return preds
-
-    def _value_pred(self, s: SchemaNode, v: Column, path: str, depth: int) -> Column:
-        preds = self.compile(s, v, path, depth)
-        return F.coalesce(_and_all([p.pred for p in preds]), F.lit(False))
-
-    def _value_pred_fn(self, s: SchemaNode, path: str, depth: int):
-        def fn(e: Column) -> Column:
-            return F.when(e.isNull(), F.lit(True)).otherwise(self._value_pred(s, e, path, depth))
-
-        return fn
-
-
-class JsonColumnValidator:
-    """Compile-once Variant validator for a JSON string column."""
+class JsonColumnValidator(_CompiledColumns):
+    """Compile-once Variant validator for a JSON string column: the
+    predicates (in ``__init__``) and the result Column (lazily, on first
+    ``apply``) are built once and reused for every DataFrame and column."""
 
     def __init__(self, schema: SchemaNode | dict, enforce_formats: bool = True):
+        """Raises ``CompileError`` when the schema has no Variant lowering."""
         if isinstance(schema, dict):
             schema = parse_schema(schema)
         self.schema = schema
         self.enforce_formats = enforce_formats
-        from jsschema_spark.resolver import RefResolver
-
-        resolver = RefResolver.with_default_providers(schema.root())
-        self._compiler = _VariantCompiler(enforce_formats, resolver=resolver)
+        compiler = _Compiler(RefResolver.with_default_providers(schema.root()), enforce_formats)
+        v = F.try_parse_json(F.col(_DOC))
+        # malformed JSON / null input: parse failure is its own violation
+        self.predicates = [CompiledPredicate("$", "$parse", v.isNotNull(), "malformed JSON")]
+        self.predicates += _absent_ok(v, compiler.compile(schema, _VariantView(v), "$"))
 
     @classmethod
     def try_compile(cls, schema: SchemaNode | dict, **kw) -> Optional["JsonColumnValidator"]:
-        self = cls(schema, **kw)
         try:
-            self._predicates(F.lit(None).cast("string"))
-        except _Unsupported:
+            return cls(schema, **kw)
+        except CompileError:
             return None
-        return self
 
-    def _predicates(self, json_col: Column) -> list[CompiledPredicate]:
-        v = F.try_parse_json(json_col)
-        preds = self._compiler.compile(self.schema, v, "$")
-        # malformed JSON / null input: parse failure is its own violation
-        parse_ok = CompiledPredicate("$", "$parse", v.isNotNull(), "malformed JSON")
-        wrapped = [parse_ok]
-        for p in preds:
-            wrapped.append(
-                CompiledPredicate(
-                    p.path, p.keyword,
-                    F.when(v.isNull(), F.lit(True)).otherwise(F.coalesce(p.pred, F.lit(False))),
-                    p.message,
-                )
-            )
-        return wrapped
+    @functools.cached_property
+    def _result(self) -> Column:
+        return F.when(
+            F.col(_DOC).isNull(),
+            F.lit(None).cast(
+                "struct<valid:boolean,violations:array<struct<keyword:string,path:string,message:string>>>"
+            ),
+        ).otherwise(F.struct(self._valid.alias("valid"), self._violations.alias("violations")))
 
     def apply(self, df: DataFrame, json_col: str, result_col: str = "validation") -> DataFrame:
-        preds = self._predicates(F.col(json_col))
-        valid = _and_all([F.coalesce(p.pred, F.lit(False)) for p in preds])
-        entries = [
-            F.when(
-                ~F.coalesce(p.pred, F.lit(False)),
-                F.struct(
-                    F.lit(p.keyword).alias("keyword"),
-                    F.lit(p.path).alias("path"),
-                    F.lit(p.message).alias("message"),
-                ),
-            )
-            for p in preds
-        ]
-        violations = F.array_compact(F.array(*entries))
-        return df.withColumn(
-            result_col,
-            F.when(
-                F.col(json_col).isNull(),
-                F.lit(None).cast(
-                    "struct<valid:boolean,violations:array<struct<keyword:string,path:string,message:string>>>"
-                ),
-            ).otherwise(F.struct(valid.alias("valid"), violations.alias("violations"))),
-        )
+        return df.withColumn(_DOC, F.col(json_col)).withColumn(result_col, self._result).drop(_DOC)
 
 
 def validate_json_auto(

@@ -1337,3 +1337,14 @@ def test_t_closeness_report(spark):
     tv = {r["zip"]: r for r in
           t_closeness_report(df, ["zip"], "band", ordered=False).collect()}
     assert abs(tv["z1"]["distance"] - 0.5 * np.abs(pg - p).sum()) < 1e-12
+
+    # a null quasi-identifier is a group of its own and keeps its pair counts
+    df = spark.createDataFrame(rows + [(None, 5)] * 4, "zip string, band int")
+    out = {r["zip"]: r for r in
+           t_closeness_report(df, ["zip"], "band", t=0.2).collect()}
+    glob = np.array([32, 22, 22, 22, 26], float)
+    p = glob / glob.sum()
+    pg = np.array([0, 0, 0, 0, 1], float)
+    emd = np.abs(np.cumsum(pg) - np.cumsum(p)).sum() / 4
+    assert out[None]["group_n"] == 4
+    assert abs(out[None]["distance"] - emd) < 1e-12 and out[None]["at_risk"]

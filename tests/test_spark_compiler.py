@@ -10,6 +10,7 @@ from pyspark.sql import types as T
 
 from jsschema_spark import parse_schema, read_string
 from jsschema_spark.compiler import TableValidator
+from jsschema_spark.pyvalidate import Validator
 
 CLIPS_SCHEMA = {
     "type": "object",
@@ -273,3 +274,63 @@ def test_violation_samples_order_by_without_id_cols(spark):
 
     with pytest.raises(ValueError):
         tv.violation_samples(df, k=2)
+
+
+def test_clips_predicate_sequence_pinned(spark):
+    """The flagship schema's predicates, in order: required, then each
+    property's keywords (type folds away on the static column types)."""
+    from jsschema_spark.synth import CLIPS_DRAFT04_SCHEMA
+
+    tv = TableValidator(parse_schema(CLIPS_DRAFT04_SCHEMA), clips_df(spark).schema)
+    assert [(p.path, p.keyword) for p in tv.predicates] == [
+        ("$.clip_id", "required"), ("$.bytes", "required"), ("$.sr_hz", "required"),
+        ("$.dur_ms", "required"), ("$.codec", "required"), ("$.transcript", "required"),
+        ("$.clip_id", "pattern"),
+        ("$.sr_hz", "minimum"), ("$.sr_hz", "maximum"),
+        ("$.dur_ms", "minimum"), ("$.dur_ms", "maximum"),
+        ("$.codec", "enum"),
+        ("$.transcript", "minLength"), ("$.transcript", "maxLength"),
+    ]
+
+
+def test_additional_properties_schema_typed(spark):
+    """An ``additionalProperties`` schema applies to every struct field and
+    map key that ``properties`` does not name and no pattern matches."""
+    schema = {"properties": {"a": {"type": "integer"}}, "additionalProperties": {"type": "integer"}}
+    node = parse_schema(schema)
+    df = spark.createDataFrame([(1, "x"), (2, None)], "a long, extra string")
+    out = TableValidator(node, df.schema).apply(df).collect()
+    assert [r.valid for r in out] == [False, True]  # a null field is absent
+    assert [(v.path, v.keyword) for v in out[0].violations] == [("$.extra", "type")]
+    assert [(v.path, v.keyword) for v in Validator(node).validate({"a": 1, "extra": "x"})] == [
+        ("$.extra", "type")
+    ]
+
+    schema = {"properties": {"m": {
+        "properties": {"a": {}}, "patternProperties": {"^p": {}},
+        "additionalProperties": {"maximum": 5},
+    }}}
+    node = parse_schema(schema)
+    rows = [({"a": 9, "p1": 9, "z": 1},), ({"z": 9},), ({},)]
+    df = spark.createDataFrame(rows, T.StructType([T.StructField("m", T.MapType(T.StringType(), T.LongType()))]))
+    got = [r.valid for r in TableValidator(node, df.schema).apply(df).collect()]
+    assert got == [Validator(node).is_valid({"m": r[0]}) for r in rows] == [True, False, True]
+
+
+def test_enum_keeps_members_of_the_column_type(spark):
+    """Typed ``enum`` never compares across JSON types: a string column does
+    not match the number 1, and a boolean member on an integer column is
+    dropped instead of failing analysis."""
+    df = spark.createDataFrame([("1", 1), ("abc", 2)], "s string, i long")
+
+    def valid(schema):
+        node = parse_schema(schema)
+        got = [r.valid for r in TableValidator(node, df.schema).apply(df).collect()]
+        core = [Validator(node).is_valid({"s": s, "i": i}) for s, i in df.collect()]
+        assert got == core, (schema, got, core)
+        return got
+
+    assert valid({"properties": {"s": {"enum": [1]}}}) == [False, False]
+    assert valid({"properties": {"i": {"enum": [True]}}}) == [False, False]
+    assert valid({"properties": {"i": {"enum": [True, 1, "2", None]}}}) == [True, False]
+    assert valid({"properties": {"s": {"enum": [1, "abc", False]}}}) == [False, True]
