@@ -22,8 +22,11 @@ pure-NumPy opus decoder is not realistic — with the Spark-side plumbing
 
 from __future__ import annotations
 
+import glob
 import hashlib
+import os
 import struct
+from itertools import repeat
 from typing import Iterator
 
 import numpy as np
@@ -232,42 +235,6 @@ def audio_payload_udf(
         yield _payload_batch(clip_ids, srs, durs, corrupt, mismatch)
 
 
-def make_audio_invariant_udf(max_check_samples: int | None = None):
-    """Build the invariant UDF. ``max_check_samples`` is the scale knob:
-    None compares the full decoded signal against the full regenerated
-    reference; an integer N compares a deterministic prefix of N samples —
-    at 10^12 clips the reference regeneration dominates compute, and a
-    prefix SNR catches the same corruption classes at a fraction of the
-    cost (full check stays the default and the pytest gate)."""
-
-    @F.pandas_udf(INVARIANT_SCHEMA)
-    def _udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        for clip_ids, payloads in it:
-            snrs, oks, lens = [], [], []
-            for cid, payload in zip(clip_ids, payloads):
-                try:
-                    sr, samples = wav_decode(payload)
-                    n_total = len(samples)
-                    check = samples
-                    if max_check_samples is not None and n_total > max_check_samples:
-                        check = samples[:max_check_samples]
-                    ref = synth_pcm(cid, sr, len(check))
-                    snrs.append(snr_db(ref, check))
-                    oks.append(True)
-                    lens.append(n_total)
-                except (ValueError, TypeError):
-                    snrs.append(float("-inf"))
-                    oks.append(False)
-                    lens.append(0)
-            yield pd.DataFrame({"snr_db": snrs, "decode_ok": oks, "n_samples": lens})
-
-    return _udf
-
-
-# full-signal invariant (the pytest gate / input_hint contract)
-audio_invariant_udf = make_audio_invariant_udf(None)
-
-
 CODEC_INVARIANT_SCHEMA = T.StructType(
     [
         T.StructField("snr_db", T.DoubleType()),
@@ -277,56 +244,66 @@ CODEC_INVARIANT_SCHEMA = T.StructType(
 )
 
 
-def make_codec_invariant_udf(max_check_samples: int | None = None):
-    """Codec-aware sibling of ``make_audio_invariant_udf``: takes
-    ``(clip_id, codec, bytes)`` and dispatches through ``decode_payload``
-    (WAV inline, FLAC via the pure-NumPy subset codec, opus honestly
-    unsupported). Three-valued ``status`` instead of a boolean:
+def _invariant_rows(cids, codecs, payloads) -> pd.DataFrame:
+    """The SNR invariant, one row per clip: decode through
+    ``decode_payload``, then compare the full decoded signal against the
+    full regenerated reference. Three-valued ``status``:
 
     * ``decoded`` — payload parsed; ``snr_db`` vs the regenerated
       reference is meaningful (the ≥30 dB gate applies downstream),
     * ``malformed`` — structural failure (truncated/bit-flipped container,
-      failed FLAC CRC/MD5); quarantine row,
-    * ``unsupported_codec`` — the codec column names a format this build
-      cannot decode (opus); routed to a side channel, not conflated with
-      corruption.
-
-    Same iterator-pandas_udf shape as every other audio kernel — Arrow
-    batches in, tiny result rows out, zero row-at-a-time Python."""
-
-    @F.pandas_udf(CODEC_INVARIANT_SCHEMA)
-    def _udf(
-        it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-    ) -> Iterator[pd.DataFrame]:
-        for clip_ids, codecs, payloads in it:
-            snrs, statuses, lens = [], [], []
-            for cid, codec, payload in zip(clip_ids, codecs, payloads):
-                try:
-                    sr, samples = decode_payload(codec, payload)
-                    n_total = len(samples)
-                    check = samples
-                    if max_check_samples is not None and n_total > max_check_samples:
-                        check = samples[:max_check_samples]
-                    ref = synth_pcm(cid, sr, len(check))
-                    snrs.append(snr_db(ref, check))
-                    statuses.append("decoded")
-                    lens.append(n_total)
-                except NotImplementedError:
-                    snrs.append(float("-inf"))
-                    statuses.append("unsupported_codec")
-                    lens.append(0)
-                except (ValueError, TypeError):
-                    snrs.append(float("-inf"))
-                    statuses.append("malformed")
-                    lens.append(0)
-            yield pd.DataFrame(
-                {"snr_db": snrs, "status": statuses, "n_samples": lens}
-            )
-
-    return _udf
+      failed FLAC CRC/MD5, NULL payload); quarantine row,
+    * ``unsupported_codec`` — the codec names a format this build cannot
+      decode (opus); routed to a side channel, not conflated with
+      corruption."""
+    snrs, statuses, lens = [], [], []
+    for cid, codec, payload in zip(cids, codecs, payloads):
+        try:
+            sr, samples = decode_payload(codec, payload)
+            n = len(samples)
+            snr, status = snr_db(synth_pcm(cid, sr, n), samples), "decoded"
+        except NotImplementedError:
+            snr, status, n = float("-inf"), "unsupported_codec", 0
+        except (ValueError, TypeError):
+            snr, status, n = float("-inf"), "malformed", 0
+        snrs.append(snr)
+        statuses.append(status)
+        lens.append(n)
+    return pd.DataFrame({"snr_db": snrs, "status": statuses, "n_samples": lens})
 
 
-codec_invariant_udf = make_codec_invariant_udf(None)
+def _wav_invariant_rows(cids, payloads) -> pd.DataFrame:
+    """WAV-only invariant rows ``(clip_id, snr_db, decode_ok, n_samples)``
+    with ``decode_ok = status == "decoded"``."""
+    cids = list(cids)
+    r = _invariant_rows(cids, repeat(None), payloads)
+    return pd.DataFrame(
+        {
+            "clip_id": cids, "snr_db": r["snr_db"],
+            "decode_ok": r["status"] == "decoded", "n_samples": r["n_samples"],
+        }
+    )
+
+
+@F.pandas_udf(INVARIANT_SCHEMA)
+def audio_invariant_udf(
+    it: Iterator[tuple[pd.Series, pd.Series]],
+) -> Iterator[pd.DataFrame]:
+    """(clip_id, bytes) → (snr_db, decode_ok, n_samples) for WAV payloads
+    (the pytest gate / input_hint contract)."""
+    for clip_ids, payloads in it:
+        yield _wav_invariant_rows(clip_ids, payloads).drop(columns=["clip_id"])
+
+
+@F.pandas_udf(CODEC_INVARIANT_SCHEMA)
+def codec_invariant_udf(
+    it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
+) -> Iterator[pd.DataFrame]:
+    """Codec-aware invariant: (clip_id, codec, bytes) → (snr_db, status,
+    n_samples), WAV inline, FLAC via the pure-NumPy subset codec, opus
+    ``unsupported_codec`` (see ``_invariant_rows``)."""
+    for clip_ids, codecs, payloads in it:
+        yield _invariant_rows(clip_ids, codecs, payloads)
 
 
 @F.pandas_udf(T.StringType())
@@ -338,7 +315,7 @@ def expected_transcript_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
 
 
 # ---------------------------------------------------------------------------
-# file-granular invariant: the single-box / many-core scale path.
+# file-granular scans: the single-box / many-core scale path.
 #
 # Measured on this sandbox: shipping ~350KB WAV payloads JVM→Python through
 # Arrow IPC tops out around 1 GB/s SHARED across all cores and degrades with
@@ -348,6 +325,41 @@ def expected_transcript_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
 # rows (clip_id, snr, ok) cross the IPC boundary. On a real multi-node
 # cluster both paths scale (each executor has its own IPC), but this one is
 # strictly cheaper everywhere: one fewer copy of every payload byte.
+
+
+def _file_scan(
+    spark, parquet_dir: str, rows_fn, schema, clip_id_col: str, bytes_col: str
+):
+    """The one file-granular audio scan every ``audio_*_scan`` runs: the
+    sorted ``*.parquet`` files of ``parquet_dir`` become one Spark task
+    each (``ValueError`` if there are none), and ``mapInPandas`` reads
+    each file's ``(clip_id_col, bytes_col)`` with pyarrow inside the task
+    and yields ``rows_fn(clip_ids, payloads)`` — one pandas frame per file
+    matching ``schema``. Payloads are zero-copy ``memoryview``s over the
+    Arrow buffers (``None`` for NULL), so payload bytes never cross the
+    JVM↔Python boundary and no per-clip ``bytes`` copy is made."""
+    files = sorted(glob.glob(os.path.join(parquet_dir, "*.parquet")))
+    if not files:
+        raise ValueError(f"no parquet files under {parquet_dir!r}")
+    files_df = local_df(spark, [(f,) for f in files], "path string").repartition(
+        len(files)
+    )
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pyarrow.parquet as pq
+
+        for pdf in batches:
+            for path in pdf["path"]:
+                table = pq.read_table(path, columns=[clip_id_col, bytes_col])
+                payloads = (
+                    memoryview(s.as_buffer()) if s.is_valid else None
+                    for chunk in table.column(bytes_col).chunks
+                    for s in chunk
+                )
+                yield rows_fn(table.column(clip_id_col).to_pylist(), payloads)
+
+    return files_df.mapInPandas(gen, schema)
+
 
 INVARIANT_ROW_SCHEMA = T.StructType(
     [
@@ -364,55 +376,12 @@ def audio_invariant_scan(
     parquet_dir: str,
     clip_id_col: str = "clip_id",
     bytes_col: str = "bytes",
-    max_check_samples: int | None = None,
 ):
-    """Per-clip SNR invariant over a parquet directory, file-granular:
-    returns a DataFrame(clip_id, snr_db, decode_ok, n_samples)."""
-    import glob as _glob
-    import os as _os
-
-    files = sorted(_glob.glob(_os.path.join(parquet_dir, "*.parquet")))
-    if not files:
-        raise ValueError(f"no parquet files under {parquet_dir!r}")
-    files_df = local_df(spark, [(f,) for f in files], "path string").repartition(
-        len(files)
+    """Per-clip SNR invariant over a parquet directory of WAV payloads:
+    DataFrame(clip_id, snr_db, decode_ok, n_samples)."""
+    return _file_scan(
+        spark, parquet_dir, _wav_invariant_rows, INVARIANT_ROW_SCHEMA, clip_id_col, bytes_col
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                table = pq.read_table(path, columns=[clip_id_col, bytes_col])
-                cids = table.column(clip_id_col).to_pylist()
-                # zero-copy payload access: Arrow buffer views, not Python
-                # bytes copies (each copy would be a fresh multi-100KB mmap)
-                payloads = (
-                    memoryview(s.as_buffer()) if s.is_valid else None
-                    for chunk in table.column(bytes_col).chunks
-                    for s in chunk
-                )
-                snrs, oks, lens = [], [], []
-                for cid, payload in zip(cids, payloads):
-                    try:
-                        sr, samples = wav_decode(payload)
-                        n_total = len(samples)
-                        check = samples
-                        if max_check_samples is not None and n_total > max_check_samples:
-                            check = samples[:max_check_samples]
-                        ref = synth_pcm(cid, sr, len(check))
-                        snrs.append(snr_db(ref, check))
-                        oks.append(True)
-                        lens.append(n_total)
-                    except (ValueError, TypeError):
-                        snrs.append(float("-inf"))
-                        oks.append(False)
-                        lens.append(0)
-                yield pd.DataFrame(
-                    {"clip_id": cids, "snr_db": snrs, "decode_ok": oks, "n_samples": lens}
-                )
-
-    return files_df.mapInPandas(gen, INVARIANT_ROW_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -476,37 +445,14 @@ def audio_profile_scan(
     clip_id_col: str = "clip_id",
     bytes_col: str = "bytes",
 ):
-    """Per-clip audio profile over a parquet directory, file-granular
-    (the same no-payload-over-IPC shape as ``audio_invariant_scan``):
+    """Per-clip audio profile over a parquet directory (``_file_scan``):
     DataFrame(clip_id, decode_ok, sr_hz, n_samples, rms_dbfs, peak,
     clip_frac, dc_offset). Join ``sr_hz``/``n_samples`` against the
     table's metadata columns for duration/rate consistency checks —
     that comparison is then a plain Catalyst filter."""
-    import glob as _glob
-    import os as _os
-
-    files = sorted(_glob.glob(_os.path.join(parquet_dir, "*.parquet")))
-    if not files:
-        raise ValueError(f"no parquet files under {parquet_dir!r}")
-    files_df = local_df(spark, [(f,) for f in files], "path string").repartition(
-        len(files)
+    return _file_scan(
+        spark, parquet_dir, _profile_rows, PROFILE_ROW_SCHEMA, clip_id_col, bytes_col
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                table = pq.read_table(path, columns=[clip_id_col, bytes_col])
-                cids = table.column(clip_id_col).to_pylist()
-                payloads = (
-                    memoryview(s.as_buffer()) if s.is_valid else None
-                    for chunk in table.column(bytes_col).chunks
-                    for s in chunk
-                )
-                yield _profile_rows(cids, payloads)
-
-    return files_df.mapInPandas(gen, PROFILE_ROW_SCHEMA)
 
 
 def make_audio_profile_udf():
@@ -633,34 +579,11 @@ def audio_spectral_scan(
     clip_id_col: str = "clip_id",
     bytes_col: str = "bytes",
 ):
-    """Per-clip spectral/silence features over a parquet directory —
-    file-granular mapInPandas, payload bytes never cross JVM↔Python IPC
-    (same shape as ``audio_profile_scan``)."""
-    import glob as _glob
-    import os as _os
-
-    files = sorted(_glob.glob(_os.path.join(parquet_dir, "*.parquet")))
-    if not files:
-        raise ValueError(f"no parquet files under {parquet_dir!r}")
-    files_df = local_df(spark, [(f,) for f in files], "path string").repartition(
-        len(files)
+    """Per-clip spectral/silence features over a parquet directory
+    (``_file_scan``)."""
+    return _file_scan(
+        spark, parquet_dir, _spectral_rows, SPECTRAL_ROW_SCHEMA, clip_id_col, bytes_col
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                table = pq.read_table(path, columns=[clip_id_col, bytes_col])
-                cids = table.column(clip_id_col).to_pylist()
-                payloads = (
-                    memoryview(s.as_buffer()) if s.is_valid else None
-                    for chunk in table.column(bytes_col).chunks
-                    for s in chunk
-                )
-                yield _spectral_rows(cids, payloads)
-
-    return files_df.mapInPandas(gen, SPECTRAL_ROW_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -757,36 +680,13 @@ def audio_fingerprint_scan(
     clip_id_col: str = "clip_id",
     bytes_col: str = "bytes",
 ):
-    """Per-clip spectral fingerprints over a parquet directory —
-    file-granular mapInPandas (payload bytes never cross JVM↔Python IPC),
-    the same scan shape as ``audio_profile_scan``. Output: (clip_id, fp,
-    n_frames, decode_ok). At 10¹²-clip scale this is the ONE pass that
-    touches audio bytes; the ~16 B/clip result is what shuffles."""
-    import glob as _glob
-    import os as _os
-
-    files = sorted(_glob.glob(_os.path.join(parquet_dir, "*.parquet")))
-    if not files:
-        raise ValueError(f"no parquet files under {parquet_dir!r}")
-    files_df = local_df(spark, [(f,) for f in files], "path string").repartition(
-        len(files)
+    """Per-clip spectral fingerprints over a parquet directory
+    (``_file_scan``). Output: (clip_id, fp, n_frames, decode_ok). At
+    10¹²-clip scale this is the ONE pass that touches audio bytes; the
+    ~16 B/clip result is what shuffles."""
+    return _file_scan(
+        spark, parquet_dir, _fingerprint_rows, FP_ROW_SCHEMA, clip_id_col, bytes_col
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                table = pq.read_table(path, columns=[clip_id_col, bytes_col])
-                cids = table.column(clip_id_col).to_pylist()
-                payloads = (
-                    memoryview(s.as_buffer()) if s.is_valid else None
-                    for chunk in table.column(bytes_col).chunks
-                    for s in chunk
-                )
-                yield _fingerprint_rows(cids, payloads)
-
-    return files_df.mapInPandas(gen, FP_ROW_SCHEMA)
 
 
 def fingerprint_near_dups(
@@ -996,14 +896,14 @@ def vad_segments(
     return out
 
 
-def _vad_rows(cids, payloads, **kw) -> pd.DataFrame:
+def _vad_rows(cids, payloads) -> pd.DataFrame:
     cols: dict[str, list] = {
         "clip_id": [], "seg_idx": [], "start_ms": [], "end_ms": [], "decode_ok": [],
     }
     for cid, payload in zip(cids, payloads):
         try:
             sr, samples = wav_decode(payload)
-            segs = vad_segments(samples, sr, **kw)
+            segs = vad_segments(samples, sr)
             ok = True
         except (ValueError, TypeError):
             segs, ok = [], False
@@ -1030,38 +930,14 @@ def audio_vad_scan(
     parquet_dir: str,
     clip_id_col: str = "clip_id",
     bytes_col: str = "bytes",
-    **vad_kw,
 ):
-    """Voice-activity segments over a parquet directory — the same
-    file-granular mapInPandas shape as ``audio_spectral_scan`` (payload
-    bytes never cross JVM↔Python IPC); output is the per-clip segment
-    manifest ``(clip_id, seg_idx, start_ms, end_ms, decode_ok)`` with a
-    ``seg_idx = -1`` sentinel for silent/undecodable clips."""
-    import glob as _glob
-    import os as _os
-
-    files = sorted(_glob.glob(_os.path.join(parquet_dir, "*.parquet")))
-    if not files:
-        raise ValueError(f"no parquet files under {parquet_dir!r}")
-    files_df = local_df(spark, [(f,) for f in files], "path string").repartition(
-        len(files)
+    """Voice-activity segments over a parquet directory (``_file_scan``):
+    the per-clip segment manifest ``(clip_id, seg_idx, start_ms, end_ms,
+    decode_ok)`` with a ``seg_idx = -1`` sentinel for silent/undecodable
+    clips."""
+    return _file_scan(
+        spark, parquet_dir, _vad_rows, VAD_ROW_SCHEMA, clip_id_col, bytes_col
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                table = pq.read_table(path, columns=[clip_id_col, bytes_col])
-                cids = table.column(clip_id_col).to_pylist()
-                payloads = (
-                    memoryview(s.as_buffer()) if s.is_valid else None
-                    for chunk in table.column(bytes_col).chunks
-                    for s in chunk
-                )
-                yield _vad_rows(cids, payloads, **vad_kw)
-
-    return files_df.mapInPandas(gen, VAD_ROW_SCHEMA)
 
 
 def payload_size_check(
@@ -1133,9 +1009,12 @@ def codec_metadata_check(
     checks sample.
 
     Adds ``header_sr``, ``header_samples``, ``meta_status`` ∈
-    {consistent, sr_mismatch, duration_mismatch, header_unreadable,
-    opaque_codec}. Opaque codecs (opus) have readable containers but no
-    cheap sample count — decode-stage checks own them."""
+    {consistent, sr_mismatch, duration_unknown, duration_mismatch,
+    header_unreadable, opaque_codec}. ``duration_unknown``: a FLAC
+    STREAMINFO total-sample count of 0, which the format defines as
+    "unknown" (``flac_decode`` then reads frames to the end), so there is
+    no container duration to compare. Opaque codecs (opus) have readable
+    containers but no cheap sample count — decode-stage checks own them."""
     from jsschema_spark.functions.multimodal import _be, _le
 
     b = F.col(bytes_col)
@@ -1177,6 +1056,7 @@ def codec_metadata_check(
             F.lit("header_unreadable"),
         )
         .when(header_sr != F.col(sr_col).cast("long"), F.lit("sr_mismatch"))
+        .when(is_flac & (header_samples == 0), F.lit("duration_unknown"))
         .when(
             F.abs(container_ms - F.col(dur_col).cast("long")) > tol_ms,
             F.lit("duration_mismatch"),
@@ -1545,9 +1425,8 @@ def audio_normalize_scan(
 ):
     """Corpus normalization TRANSFORM (the fix-path sibling of the audio
     gates): decode → resample to ``target_sr`` → gain-normalize to
-    ``target_dbfs`` → re-encode, file-granular mapInPandas (payload bytes
-    never cross JVM↔Python IPC — same shape as ``audio_profile_scan``).
-    Output rows: ``clip_id, bytes (normalized WAV), sr_hz, n_samples,
+    ``target_dbfs`` → re-encode, file-granular (``_file_scan``). Output
+    rows: ``clip_id, bytes (normalized WAV), sr_hz, n_samples,
     decode_ok`` — undecodable clips pass through with null bytes so the
     caller can route them to quarantine instead of silently dropping
     them. ``resampler``: ``"linear"`` (default — kept for bit-stable
@@ -1555,17 +1434,9 @@ def audio_normalize_scan(
     polyphase kernel, ``resample_sinc`` — ≥53 dB vs ~40 dB on
     true-interpolation legs, same ⌊n·L/M⌋ output grid, a few × the
     per-sample cost)."""
-    import glob as _glob
-    import os as _os
-
     if resampler not in ("linear", "sinc"):
         raise ValueError(f"unknown resampler: {resampler!r}")
-    files = sorted(_glob.glob(_os.path.join(parquet_dir, "*.parquet")))
-    if not files:
-        raise ValueError(f"no parquet files under {parquet_dir!r}")
-    files_df = local_df(spark, [(f,) for f in files], "path string").repartition(
-        len(files)
-    )
+    resample = resample_sinc if resampler == "sinc" else resample_linear
 
     out_schema = T.StructType(
         [
@@ -1577,40 +1448,26 @@ def audio_normalize_scan(
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
+    def rows(cids, payloads) -> pd.DataFrame:
+        out = {"clip_id": [], "bytes": [], "sr_hz": [], "n_samples": [], "decode_ok": []}
+        for cid, payload in zip(cids, payloads):
+            out["clip_id"].append(cid)
+            try:
+                sr, pcm = wav_decode(payload)
+                pcm = resample(pcm, sr, target_sr)
+                pcm = normalize_gain(pcm, target_dbfs)
+                out["bytes"].append(wav_encode(pcm, target_sr))
+                out["sr_hz"].append(target_sr)
+                out["n_samples"].append(len(pcm))
+                out["decode_ok"].append(True)
+            except (ValueError, TypeError):
+                out["bytes"].append(None)
+                out["sr_hz"].append(0)
+                out["n_samples"].append(0)
+                out["decode_ok"].append(False)
+        return pd.DataFrame(out)
 
-        for pdf in batches:
-            for path in pdf["path"]:
-                table = pq.read_table(path, columns=[clip_id_col, bytes_col])
-                cids = table.column(clip_id_col).to_pylist()
-                payloads = (
-                    memoryview(s.as_buffer()) if s.is_valid else None
-                    for chunk in table.column(bytes_col).chunks
-                    for s in chunk
-                )
-                out = {"clip_id": [], "bytes": [], "sr_hz": [], "n_samples": [], "decode_ok": []}
-                resample = (
-                    resample_sinc if resampler == "sinc" else resample_linear
-                )
-                for cid, payload in zip(cids, payloads):
-                    out["clip_id"].append(cid)
-                    try:
-                        sr, pcm = wav_decode(payload)
-                        pcm = resample(pcm, sr, target_sr)
-                        pcm = normalize_gain(pcm, target_dbfs)
-                        out["bytes"].append(wav_encode(pcm, target_sr))
-                        out["sr_hz"].append(target_sr)
-                        out["n_samples"].append(len(pcm))
-                        out["decode_ok"].append(True)
-                    except (ValueError, TypeError):
-                        out["bytes"].append(None)
-                        out["sr_hz"].append(0)
-                        out["n_samples"].append(0)
-                        out["decode_ok"].append(False)
-                yield pd.DataFrame(out)
-
-    return files_df.mapInPandas(gen, out_schema)
+    return _file_scan(spark, parquet_dir, rows, out_schema, clip_id_col, bytes_col)
 
 
 def xcorr_offset(

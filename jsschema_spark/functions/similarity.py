@@ -29,6 +29,10 @@ from jsschema_spark.functions.linalg import (
     nearest_cells,
 )
 
+# brute_force_topk collects its query batch to the driver; a batch larger
+# than this is an ANN workload (ivf_search / lsh_search), not a batch
+_MAX_QUERY_ROWS = 10_000
+
 
 def brute_force_topk(
     corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -46,12 +50,18 @@ def brute_force_topk(
     Candidates are then re-scored with the SAME Catalyst ``cosine``
     expression and window as the naive cross join, so the output is
     bit-identical. The naive plan evaluated the interpreted cosine fold
-    |corpus|·|queries| times (~2.3s at 20k×5, sf1.0 — vs ~0.5s)."""
+    |corpus|·|queries| times (~2.3s at 20k×5, sf1.0 — vs ~0.5s).
+    Raises ``ValueError`` for a batch over ``_MAX_QUERY_ROWS`` queries."""
     import numpy as np
     import pandas as pd
 
     qdf = queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("qv"))
-    qrows = [r for r in qdf.collect()]
+    qrows = qdf.limit(_MAX_QUERY_ROWS + 1).collect()
+    if len(qrows) > _MAX_QUERY_ROWS:
+        raise ValueError(
+            f"brute_force_topk: more than {_MAX_QUERY_ROWS} queries; "
+            "use ivf_search or lsh_search for large query sets"
+        )
     if not qrows:
         c0 = corpus.select(F.col(corpus_id).alias("vec_id"))
         return (

@@ -1,10 +1,99 @@
 """File-granular audio pipeline: payload bytes never cross JVM↔Python IPC
 (the single-box scale path — see audio.py's bandwidth note)."""
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from jsschema_spark import audio
 from jsschema_spark.audio import audio_invariant_scan, audio_invariant_udf
 from jsschema_spark.synth import clips_audio_to_parquet
+
+# one decodable WAV, one garbage payload, one NULL payload
+_MIXED = [
+    ("good", "pcm_s16le", audio.wav_encode(audio.synth_pcm("good", 16000, 8000), 16000)),
+    ("garbage", "pcm_s16le", b"definitely not a RIFF/WAVE payload"),
+    ("null", "pcm_s16le", None),
+]
+
+
+def _write_mixed(path, rows):
+    path.mkdir()
+    pq.write_table(
+        pa.table({
+            "clip_id": pa.array([c for c, _, _ in rows], pa.string()),
+            "codec": pa.array([k for _, k, _ in rows], pa.string()),
+            "bytes": pa.array([b for _, _, b in rows], pa.binary()),
+        }),
+        str(path / "part-0.parquet"),
+    )
+    return str(path)
+
+
+_SCANS = [
+    "audio_invariant_scan", "audio_profile_scan", "audio_spectral_scan",
+    "audio_fingerprint_scan", "audio_vad_scan", "audio_normalize_scan",
+]
+
+
+@pytest.mark.parametrize("scan", _SCANS)
+def test_scan_empty_dir_and_bad_payloads(spark, tmp_path, scan):
+    """Every file-granular scan: an empty directory is a ValueError; a
+    garbage and a NULL payload each give one undecodable row per clip
+    beside the decodable one."""
+    fn = getattr(audio, scan)
+    (tmp_path / "empty").mkdir()
+    with pytest.raises(ValueError, match="no parquet files"):
+        fn(spark, str(tmp_path / "empty"))
+
+    rows = fn(spark, _write_mixed(tmp_path / "mixed", _MIXED)).collect()
+    by_clip = {}
+    for r in rows:
+        by_clip.setdefault(r.clip_id, []).append(r)
+    assert set(by_clip) == {"good", "garbage", "null"}
+    for cid, want_ok in (("good", True), ("garbage", False), ("null", False)):
+        rs = by_clip[cid]
+        assert [r.decode_ok for r in rs] == [want_ok] * len(rs), (scan, cid)
+        if scan == "audio_vad_scan":
+            seg_idx = [r.seg_idx for r in rs]
+            assert min(seg_idx) >= 0 if want_ok else seg_idx == [-1], (cid, seg_idx)
+        else:
+            assert len(rs) == 1, (scan, cid)
+        if scan == "audio_normalize_scan":
+            assert (rs[0].bytes is not None) == want_ok
+
+
+def test_invariant_forms_agree_on_bad_payloads(spark, tmp_path):
+    """The one SNR-invariant loop behind the WAV UDF, the codec UDF and
+    the file scan: equal SNRs, ``decode_ok == (status == "decoded")``,
+    and a NULL payload is ``malformed`` like garbage, not an error."""
+    rows = _MIXED + [("opus", "opus", b"OggS" + bytes(60))]
+    df = spark.createDataFrame(
+        [(c, k, bytearray(b) if b is not None else None) for c, k, b in rows],
+        "clip_id string, codec string, bytes binary",
+    )
+    got = {
+        r.clip_id: r
+        for r in df.select(
+            "clip_id",
+            audio_invariant_udf("clip_id", "bytes").alias("w"),
+            audio.codec_invariant_udf("clip_id", "codec", "bytes").alias("c"),
+        ).collect()
+    }
+    stored = _write_mixed(tmp_path / "mixed", rows)
+    scan = {r.clip_id: r for r in audio_invariant_scan(spark, stored).collect()}
+    want = {
+        "good": "decoded", "garbage": "malformed", "null": "malformed",
+        "opus": "unsupported_codec",
+    }
+    assert {c: r.c.status for c, r in got.items()} == want
+    for cid, r in got.items():
+        assert r.w.snr_db == r.c.snr_db == scan[cid].snr_db, cid
+        assert r.w.decode_ok == (r.c.status == "decoded") == scan[cid].decode_ok, cid
+        assert r.w.n_samples == r.c.n_samples == scan[cid].n_samples, cid
+    assert got["good"].c.snr_db == audio.SNR_CAP_DB and got["good"].c.n_samples == 8000
+    assert got["null"].c.snr_db == float("-inf") and got["null"].c.n_samples == 0
 
 
 def test_file_granular_matches_ipc_path(spark, tmp_path):

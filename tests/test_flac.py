@@ -298,6 +298,40 @@ def test_codec_metadata_check_catalyst_parse(spark):
             assert got["header_sr"] == sr
 
 
+def test_codec_metadata_check_flac_unknown_sample_count(spark):
+    """A FLAC STREAMINFO total-sample count of 0 means "unknown": the
+    decoder reads frames to the end, and the header screen reports
+    ``duration_unknown`` instead of a 0 ms ``duration_mismatch``."""
+    import pandas as pd
+
+    from jsschema_spark.audio import codec_metadata_check, synth_pcm
+
+    sr, n = 16000, 6000
+    pcm = synth_pcm("clip-000000000007", sr, n).copy()
+    enc = bytearray(flac_encode(pcm, sr))
+    assert flac_stream_info(bytes(enc))["total_samples"] == n
+    # 36-bit count: low nibble of stream byte 21 (0-based) + bytes 22-25
+    enc[21] &= 0xF0
+    enc[22:26] = bytes(4)
+    enc = bytes(enc)
+    assert flac_stream_info(enc)["total_samples"] == 0
+    dec_sr, dec = flac_decode(enc)
+    assert dec_sr == sr and np.array_equal(dec, pcm)
+
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            [("unknown", "flac", enc, sr, n * 1000 // sr),
+             ("unknown_sr_lie", "flac", enc, 44100, n * 1000 // sr)],
+            columns=["clip_id", "codec", "bytes", "sr_hz", "dur_ms"],
+        )
+    )
+    out = {r["clip_id"]: r for r in codec_metadata_check(df).collect()}
+    assert out["unknown"]["meta_status"] == "duration_unknown"
+    assert out["unknown"]["header_samples"] == 0 and out["unknown"]["header_sr"] == sr
+    # the rate is still known, so a rate lie is still reported first
+    assert out["unknown_sr_lie"]["meta_status"] == "sr_mismatch"
+
+
 def test_decoder_lpc_divergence_is_valueerror():
     """Corrupt LPC parameters can make the feedback recursion explode
     BEFORE the frame CRC is checked — the decoder must surface that as

@@ -187,6 +187,17 @@ def test_brute_force_topk(spark, emb):
         assert all(rs[i].cos >= rs[i + 1].cos - 1e-12 for i in range(len(rs) - 1))
 
 
+def test_brute_force_topk_caps_query_batch(spark, emb, monkeypatch):
+    """The query batch is collected to the driver: one row over the cap is
+    refused with a pointer to the ANN paths; a batch at the cap runs."""
+    monkeypatch.setattr(S, "_MAX_QUERY_ROWS", 3)
+    at_cap = emb.limit(3).select(F.col("vec_id").alias("query_id"), "embedding")
+    assert S.brute_force_topk(emb, at_cap, k=2).count() == 6
+    over = emb.limit(4).select(F.col("vec_id").alias("query_id"), "embedding")
+    with pytest.raises(ValueError, match="ivf_search or lsh_search"):
+        S.brute_force_topk(emb, over, k=2)
+
+
 def test_lsh_topk_recall(spark, emb):
     dim = len(emb.select("embedding").first()[0])
     queries = emb.limit(5).select(F.col("vec_id").alias("query_id"), "embedding")
