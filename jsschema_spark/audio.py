@@ -455,19 +455,15 @@ def audio_profile_scan(
     )
 
 
-def make_audio_profile_udf():
+@F.pandas_udf(T.StructType([f for f in PROFILE_ROW_SCHEMA.fields if f.name != "clip_id"]))
+def audio_profile_udf(
+    it: Iterator[tuple[pd.Series, pd.Series]],
+) -> Iterator[pd.DataFrame]:
     """Column form of the profile (payload bytes already in the table):
     (clip_id, bytes) → profile struct. Prefer ``audio_profile_scan`` on a
     single box — this form ships every payload byte through Arrow IPC."""
-    schema = T.StructType([f for f in PROFILE_ROW_SCHEMA.fields if f.name != "clip_id"])
-
-    @F.pandas_udf(schema)
-    def _udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        for clip_ids, payloads in it:
-            out = _profile_rows(clip_ids, payloads)
-            yield out.drop(columns=["clip_id"])
-
-    return _udf
+    for clip_ids, payloads in it:
+        yield _profile_rows(clip_ids, payloads).drop(columns=["clip_id"])
 
 
 # --------------------------------------------------------------------------
@@ -749,21 +745,18 @@ def transcript_rate_check(
     )
 
 
-def make_audio_fingerprint_udf():
-    """Column-form fingerprint: iterator pandas UDF (clip_id kept only for
-    signature symmetry with the invariant UDF; the fingerprint is a pure
-    function of the bytes). Returns struct(fp long, n_frames int,
-    decode_ok boolean). Use ``audio_fingerprint_scan`` for stored corpora
-    (bytes never cross IPC); this form is for STREAMING micro-batches and
-    ad-hoc columns where rows are already in flight."""
-    schema = "fp long, n_frames int, decode_ok boolean"
-
-    @F.pandas_udf(schema)
-    def _udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        for cids, payloads in it:
-            yield _fingerprint_rows(cids, payloads).drop(columns=["clip_id"])
-
-    return _udf
+@F.pandas_udf(T.StructType([f for f in FP_ROW_SCHEMA.fields if f.name != "clip_id"]))
+def audio_fingerprint_udf(
+    it: Iterator[tuple[pd.Series, pd.Series]],
+) -> Iterator[pd.DataFrame]:
+    """Column-form fingerprint (clip_id kept only for signature symmetry
+    with the invariant UDF; the fingerprint is a pure function of the
+    bytes): (clip_id, bytes) → struct(fp long, n_frames int, decode_ok
+    boolean). Use ``audio_fingerprint_scan`` for stored corpora (bytes
+    never cross IPC); this form is for STREAMING micro-batches and ad-hoc
+    columns where rows are already in flight."""
+    for cids, payloads in it:
+        yield _fingerprint_rows(cids, payloads).drop(columns=["clip_id"])
 
 
 def write_fingerprint_index(fp_df, path: str, mode: str = "overwrite") -> None:

@@ -29,6 +29,23 @@ Scale design (the whole point — 100 TB of documents):
   seeded NumPy, shipped as literals) buckets vectors by sign pattern;
   exact cosine verifies within buckets (capped like the text buckets).
   Brute-force pairing is only for oracle tests.
+* **One pairing core.** Every candidate path above keys its rows
+  (band, chunk, sign pattern, text block) and pairs within each key under
+  ``_bounded_self_pairs``' size cap. The incremental forms key the new
+  batch and the stored index the same way and call ``_index_pairs``:
+  new-vs-capped-corpus pairs plus the batch's own capped self-pairs.
+* **Materialization is the caller's.** A keyed stream that feeds several
+  consumers (the size count, both join sides, the chain window) is
+  ``localCheckpoint(eager=True)``-ed once by the function that built it:
+  minhash bands, hamming chunks, the embedding skinny stream, the
+  ``jaccard_pairs`` shingles and ``containment_pairs``' two streams.
+  Measured 3-5× faster than lazy or eager persist for these pair
+  pipelines (minhash_near_dups first execution: 3.0s checkpointed vs
+  14.5-19.6s under DISK_ONLY or MEMORY_AND_DISK persist at
+  sf0.1/local[32]). Like ``connected_components``, a local checkpoint
+  gives up lineage recovery on executor loss; at cluster scale with
+  executor churn, use ``checkpoint()`` with ``spark.checkpoint.dir`` on
+  reliable storage instead.
 
 The text paths are Python-free: Column/DataFrame compositions only
 (whole-stage codegen + standard shuffles Catalyst can plan); the shingle
@@ -265,7 +282,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_k: int = 3,
     max_bucket_size: int = 500,
-    materialize: "str | bool" = "checkpoint",
 ) -> DataFrame:
     """Candidate near-dup pairs ``(id_a, id_b)`` (id_a < id_b) that share at
     least one LSH band. rows-per-band R = num_hashes/bands sets the
@@ -282,12 +298,23 @@ def minhash_lsh_pairs(
     transitive linking of a genuine duplicate group is preserved when the
     group is contiguous under that ordering — guaranteed for homogeneous
     buckets, probabilistic (per-lane collision) for mixed ones."""
+    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
+    # the bands feed the size count, both join sides and the chain window;
+    # checkpoint them once or each re-runs the signature pipeline
+    banded = _minhash_bands(sig, num_hashes, bands).localCheckpoint(eager=True)
+    return _bounded_self_pairs(
+        banded, ["band", "bh"], max_bucket_size, chain_order=["__ord0"]
+    )
+
+
+def _minhash_bands(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """``(doc_id, __ord0, band, bh)`` rows of a ``(doc_id, sig)`` stream:
+    one multi-arg xxhash64 over each band's r = num_hashes/bands signature
+    longs (no string concat per band), plus the first lane as the
+    similarity-correlated chain order."""
     if num_hashes % bands:
         raise ValueError("num_hashes must divide into bands")
     r = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
-    # multi-arg xxhash64 over the band's r signature longs — no string
-    # concat materialization per band
     band_structs = F.array(
         *[
             F.struct(
@@ -297,64 +324,55 @@ def minhash_lsh_pairs(
             for b in range(bands)
         ]
     )
-    banded = sig.select(
+    return sig.select(
         "doc_id", F.col("sig")[0].alias("__ord0"), F.explode(band_structs).alias("e")
     ).select(
         "doc_id", "__ord0", F.col("e.band").alias("band"), F.col("e.bh").alias("bh")
     )
-    return _bounded_self_pairs(
-        banded, ["band", "bh"], max_bucket_size, chain_order=["__ord0"],
-        materialize=materialize,
+
+
+def _split_by_size(
+    keyed: DataFrame, key_cols: list[str], max_bucket_size: int
+) -> "tuple[DataFrame, DataFrame]":
+    """``(rows of buckets ≤ cap, rows of over-cap buckets)`` of a keyed
+    stream.
+
+    Two-phase size detection: ``groupBy(key).count()`` (map-side combine —
+    each executor pre-reduces its rows, so even a degenerate bucket ships
+    one partial count per task, never its rows), then a join of the
+    over-cap keys back onto the stream. Unlike a COUNT window over the
+    bucket key, no reducer ever receives all rows of a degenerate bucket
+    just to count it."""
+    sizes = keyed.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__bn"))
+    # over-cap keys are usually tiny (≤ n/cap), but on a boilerplate-heavy
+    # corpus n/cap itself can be huge — let Catalyst/AQE pick the join from
+    # the runtime size estimate rather than force-broadcasting
+    big_keys = (
+        sizes.where(F.col("__bn") > max_bucket_size)
+        .select(*key_cols, F.lit(True).alias("__big"))
     )
-
-
-def _materialize(df: DataFrame, mode: "str | bool") -> DataFrame:
-    """Caller-facing materialization knob for multi-consumer DataFrames.
-
-    * ``"checkpoint"`` (default) — ``localCheckpoint(eager=True)``: one
-      eager job materializes the stream, consumers read materialized
-      partitions, lineage is truncated. Measured 3-5× faster than persist
-      for this engine's pair pipelines (minhash_near_dups first execution:
-      3.0s checkpointed vs 14.5-19.6s under lazy/eager DISK_ONLY or
-      MEMORY_AND_DISK persist at sf0.1/local[32] — the InMemoryRelation
-      path costs far more than the extra job). Trade-off: partitions pin
-      to executors; at cluster scale with executor churn, point
-      spark.checkpoint.dir at reliable storage or pass "persist".
-    * ``"persist"`` — ``persist(DISK_ONLY)``: lazy (no job at
-      DataFrame-construction time) and recomputable by lineage on executor
-      loss; measurably slower on first execution here (numbers above).
-    * ``"none"`` / ``False`` — no materialization; upstream recomputes per
-      consumer (right when upstream is a cheap scan-side projection).
-    """
-    if mode in ("none", False, None):
-        return df
-    if mode in ("checkpoint", True):
-        return df.localCheckpoint(eager=True)
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.DISK_ONLY)
-    raise ValueError(f"unknown materialize mode: {mode!r}")
+    tagged = keyed.join(big_keys, key_cols, "left")
+    return (
+        tagged.where(F.col("__big").isNull()).drop("__big"),
+        tagged.where(F.col("__big")).drop("__big"),
+    )
 
 
 def _bounded_self_pairs(
     banded: DataFrame, key_cols: list[str], max_bucket_size: int,
     payload: Optional[str] = None,
     chain_order: Optional[list[str]] = None,
-    materialize: "str | bool" = "checkpoint",
 ) -> DataFrame:
-    """Within-bucket pairing with a size cap: full all-pairs equi-join for
-    buckets ≤ cap, consecutive-pair chaining (one window pass) above it.
-    ``payload``: optional extra column carried onto both sides (``<p>_a`` /
-    ``<p>_b``).
+    """Within-bucket pairing with a size cap over a keyed
+    ``(doc_id, *key_cols, ...)`` stream: full all-pairs equi-join for
+    buckets ≤ cap (sizes from ``_split_by_size``), consecutive-pair
+    chaining (one window pass) above it. ``payload``: optional extra
+    column carried onto both sides (``<p>_a`` / ``<p>_b``). Output
+    ``(id_a, id_b[, <p>_a, <p>_b])``, id_a < id_b, distinct.
 
-    Bucket sizes come from a two-phase detection: ``groupBy(key).count()``
-    (map-side combine — each executor pre-reduces its rows, so even a
-    degenerate bucket ships one partial count per task, never its rows) and
-    a **broadcast** join of the over-cap bucket keys back onto the stream.
-    There are at most n/cap over-cap buckets, so the broadcast side is tiny
-    by construction. Unlike a COUNT window over the bucket key, no reducer
-    ever receives all rows of a degenerate bucket just to count it.
+    The stream is read by the size count, both join sides and the chain
+    window. Nothing is materialized here: a caller whose stream is
+    expensive to recompute checkpoints it first.
 
     ``chain_order``: columns that order the consecutive chain within an
     over-cap bucket. Pass a similarity-correlated key (a signature lane,
@@ -370,29 +388,7 @@ def _bounded_self_pairs(
 
     from pyspark.sql import Window
 
-    # materialize the banded stream once when its upstream is expensive
-    # (minhash/simhash signatures): it feeds THREE consumers — the size
-    # aggregation, both sides of the all-pairs join, and the chain window —
-    # which would otherwise each re-execute the signature pipeline
-    # (measured 3× wall on minhash). Rows are a few dozen bytes (ids +
-    # bucket key), so this is MBs per million docs. Callers whose upstream
-    # is a cheap projection but whose rows carry a fat payload (embedding
-    # vectors) pass materialize="none" and recompute instead. Default is
-    # an eager localCheckpoint — measured 3-5x faster here than lazy OR
-    # eager persist; see _materialize for numbers and the cluster-scale
-    # trade-off.
-    banded = _materialize(banded, materialize)
-    sizes = banded.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__bn"))
-    # over-cap keys are usually tiny (≤ n/cap), but on a boilerplate-heavy
-    # corpus n/cap itself can be huge — let Catalyst/AQE pick the join from
-    # the runtime size estimate rather than force-broadcasting
-    big_keys = (
-        sizes.where(F.col("__bn") > max_bucket_size)
-        .select(*key_cols, F.lit(True).alias("__big"))
-    )
-    tagged = banded.join(big_keys, key_cols, "left")
-    small = tagged.where(F.col("__big").isNull()).drop("__big")
-    big = tagged.where(F.col("__big")).drop("__big")
+    small, big = _split_by_size(banded, key_cols, max_bucket_size)
 
     pay_a = [F.col(f"a.{payload}").alias(f"{payload}_a")] if payload else []
     pay_b = [F.col(f"b.{payload}").alias(f"{payload}_b")] if payload else []
@@ -438,6 +434,56 @@ def _bounded_self_pairs(
 # stored signature table — one new-batch signature pass + an equi-join on
 # band buckets, never a full recompute.
 
+def _index_pairs(
+    new: DataFrame, corpus: DataFrame, key_cols: list[str], max_bucket_size: int,
+    payload: Optional[str] = None,
+    chain_order: Optional[list[str]] = None,
+) -> DataFrame:
+    """Candidate pairs of a keyed new batch against a keyed stored index
+    (both ``(doc_id, *key_cols, ...)``) plus the batch's own capped
+    self-pairs (``_bounded_self_pairs``): ``(id_a, id_b[, <p>_a, <p>_b])``,
+    id_a < id_b, distinct, the payload aligned to the ids. Pairs with both
+    ids in the corpus are never produced.
+
+    Corpus buckets larger than ``max_bucket_size`` are truncated to their
+    ``max_bucket_size`` smallest doc_ids (sort-based, one window pass over
+    over-cap rows only — O(size log size), never quadratic): a new doc
+    only needs ONE surviving link into an existing group to be recognized
+    as a duplicate, and degenerate buckets are boilerplate families where
+    any representative verifies. The batch side is read by the cross join
+    and the self-pairing; the caller checkpoints it."""
+    from pyspark.sql import Window
+
+    small, big = _split_by_size(corpus, key_cols, max_bucket_size)
+    w = Window.partitionBy(*key_cols).orderBy("doc_id")
+    capped = small.unionByName(
+        big.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= max_bucket_size)
+        .drop("__rn")
+    )
+    swap = F.col("n.doc_id") > F.col("c.doc_id")
+    pay = (
+        [
+            F.when(swap, F.col(f"c.{payload}")).otherwise(F.col(f"n.{payload}")).alias(f"{payload}_a"),
+            F.when(swap, F.col(f"n.{payload}")).otherwise(F.col(f"c.{payload}")).alias(f"{payload}_b"),
+        ]
+        if payload
+        else []
+    )
+    cross = (
+        new.alias("n")
+        .join(capped.alias("c"), key_cols)
+        .where(F.col("n.doc_id") != F.col("c.doc_id"))
+        .select(
+            F.least(F.col("n.doc_id"), F.col("c.doc_id")).alias("id_a"),
+            F.greatest(F.col("n.doc_id"), F.col("c.doc_id")).alias("id_b"),
+            *pay,
+        )
+    )
+    within = _bounded_self_pairs(new, key_cols, max_bucket_size, payload, chain_order)
+    return cross.unionByName(within).distinct()
+
+
 def write_minhash_index(
     df: DataFrame, path: str, id_col: str, text_col: str,
     num_hashes: int = 64, shingle_k: int = 3, mode: str = "overwrite",
@@ -462,69 +508,20 @@ def incremental_minhash_pairs(
 
     Shapes: banding the stored signatures is ``bands`` xxhash64 calls over
     array slices (codegen, no shingling, no text); the new batch is
-    signatured once; candidates come from (a) a new-vs-corpus equi-join on
-    (band, band_hash) and (b) the capped within-batch self-join. Corpus
-    band buckets larger than ``max_bucket_size`` are truncated to their
-    ``max_bucket_size`` smallest doc_ids (sort-based, one window pass over
-    over-cap rows only — O(size log size), never quadratic): a new doc
-    only needs ONE surviving link into an existing group to be recognized
-    as a duplicate, and degenerate buckets are boilerplate families where
-    any representative verifies. Returns ``(id_a, id_b)`` candidates,
-    id_a < id_b; verify with ``jaccard_pairs`` over the union table."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must divide into bands")
-    r = num_hashes // bands
-
-    def banded(sig_df: DataFrame) -> DataFrame:
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(*[F.col("sig")[b * r + j] for j in range(r)]).alias("bh"),
-                )
-                for b in range(bands)
-            ]
-        )
-        return sig_df.select(
-            "doc_id", F.col("sig")[0].alias("__ord0"), F.explode(band_structs).alias("e")
-        ).select("doc_id", "__ord0", F.col("e.band").alias("band"), F.col("e.bh").alias("bh"))
-
-    new_sig = _materialize(
-        minhash_signatures(new_df, id_col, text_col, num_hashes, shingle_k), "checkpoint"
+    signatured and banded once (checkpointed for its two consumers); the
+    candidates are ``_index_pairs`` on (band, band_hash). Returns
+    ``(id_a, id_b)`` candidates, id_a < id_b; verify with ``jaccard_pairs``
+    over the union table. An empty index gives exactly
+    ``minhash_lsh_pairs`` of the batch."""
+    new_banded = _minhash_bands(
+        minhash_signatures(new_df, id_col, text_col, num_hashes, shingle_k),
+        num_hashes, bands,
+    ).localCheckpoint(eager=True)
+    corpus_banded = _minhash_bands(index.select("doc_id", "sig"), num_hashes, bands)
+    return _index_pairs(
+        new_banded, corpus_banded, ["band", "bh"], max_bucket_size,
+        chain_order=["__ord0"],
     )
-    new_banded = _materialize(banded(new_sig), "checkpoint")
-    corpus_banded = banded(index.select("doc_id", "sig"))
-
-    # cap degenerate corpus buckets (one window pass over over-cap rows only)
-    from pyspark.sql import Window
-
-    sizes = corpus_banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("__bn"))
-    big = sizes.where(F.col("__bn") > max_bucket_size).select("band", "bh", F.lit(True).alias("__big"))
-    tagged = corpus_banded.join(big, ["band", "bh"], "left")
-    w = Window.partitionBy("band", "bh").orderBy("doc_id")
-    capped = tagged.where(
-        F.col("__big").isNull()
-    ).drop("__big").unionByName(
-        tagged.where(F.col("__big"))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= max_bucket_size)
-        .drop("__big", "__rn")
-    )
-
-    cross = (
-        new_banded.alias("n")
-        .join(capped.alias("c"), ["band", "bh"])
-        .where(F.col("n.doc_id") != F.col("c.doc_id"))
-        .select(
-            F.least(F.col("n.doc_id"), F.col("c.doc_id")).alias("id_a"),
-            F.greatest(F.col("n.doc_id"), F.col("c.doc_id")).alias("id_b"),
-        )
-    )
-    within = _bounded_self_pairs(
-        new_banded, ["band", "bh"], max_bucket_size, chain_order=["__ord0"],
-        materialize="none",  # new_banded is already persisted above
-    )
-    return cross.unionByName(within.select("id_a", "id_b")).distinct()
 
 
 def incremental_near_duplicates_minhash(
@@ -615,7 +612,7 @@ def jaccard_pairs(
     # once or the semi-join + shingling subtree executes twice. Bounded by
     # the candidate set, which LSH already made orders of magnitude smaller
     # than the corpus.
-    sh = _materialize(sh, "checkpoint")
+    sh = sh.localCheckpoint(eager=True)
     out = (
         candidates.join(sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -756,7 +753,6 @@ def simhash_values(
 def simhash_near_dups(
     df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3,
     max_bucket_size: int = 500,
-    materialize: "str | bool" = "checkpoint",
     n_bits: int = 64,
     hash_fn: Optional[Callable[[Column], Column]] = None,
 ) -> DataFrame:
@@ -778,14 +774,20 @@ def simhash_near_dups(
     sh = simhash_values(df, id_col, text_col, n_bits=n_bits, hash_fn=hash_fn)
     return hamming_near_dups(
         sh, "doc_id", "sh", max_hamming=max_hamming,
-        max_bucket_size=max_bucket_size, materialize=materialize, n_bits=n_bits,
+        max_bucket_size=max_bucket_size, n_bits=n_bits,
     )
 
 
-def _hamming_chunked(sh_df: DataFrame, n_chunks: int, width: int) -> DataFrame:
-    """Explode a ``(doc_id, sh)`` signature stream into pigeonhole chunk
-    rows ``(doc_id, sh, chunk, cv)`` — pure codegen bit ops, n_chunks
-    rows/doc."""
+def _hamming_chunked(
+    df: DataFrame, id_col: str, sig_col: str, max_hamming: int, n_bits: int
+) -> DataFrame:
+    """Explode a signature stream into pigeonhole chunk rows
+    ``(doc_id, sh, chunk, cv)``: C = max_hamming + 1 equal-width chunks of
+    the ``n_bits`` signature — pure codegen bit ops, C rows/doc."""
+    n_chunks = max_hamming + 1
+    if n_bits % n_chunks:
+        raise ValueError("n_bits must divide into max_hamming + 1 chunks")
+    width = n_bits // n_chunks
     chunks = F.array(
         *[
             F.struct(
@@ -795,15 +797,31 @@ def _hamming_chunked(sh_df: DataFrame, n_chunks: int, width: int) -> DataFrame:
             for c in range(n_chunks)
         ]
     )
+    sh_df = df.select(F.col(id_col).alias("doc_id"), F.col(sig_col).alias("sh"))
     return sh_df.select("doc_id", "sh", F.explode(chunks).alias("e")).select(
         "doc_id", "sh", F.col("e.chunk").alias("chunk"), F.col("e.cv").alias("cv")
+    )
+
+
+def _hamming_verified(pairs: DataFrame, id_col: str, max_hamming: int) -> DataFrame:
+    """``(id_a, id_b, sh_a, sh_b)`` candidates → ``({id}_a, {id}_b,
+    hamming)`` pairs within ``max_hamming``: one codegen
+    ``bit_count(xor)`` filter (ids keep the ``id_a``/``id_b`` names when
+    ``id_col`` is ``doc_id``)."""
+    return (
+        pairs.select(
+            F.col("id_a").alias(f"{id_col}_a") if id_col != "doc_id" else F.col("id_a"),
+            F.col("id_b").alias(f"{id_col}_b") if id_col != "doc_id" else F.col("id_b"),
+            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
+        )
+        .where(F.col("hamming") <= max_hamming)
+        .distinct()
     )
 
 
 def hamming_near_dups(
     df: DataFrame, id_col: str, sig_col: str, max_hamming: int = 3,
     max_bucket_size: int = 500,
-    materialize: "str | bool" = "checkpoint",
     n_bits: int = 64,
 ) -> DataFrame:
     """Near-dup pairs among PRECOMPUTED bit signatures (a long column) by
@@ -818,27 +836,15 @@ def hamming_near_dups(
     consecutive pairs ordered by the full signature (near signatures sort
     adjacent). Verification is one codegen
     ``bit_count(xor) <= max_hamming``. Output: id_a, id_b, hamming."""
-    n_chunks = max_hamming + 1
-    if n_bits % n_chunks:
-        raise ValueError("n_bits must divide into max_hamming + 1 chunks")
-    width = n_bits // n_chunks
-    chunked = _hamming_chunked(
-        df.select(F.col(id_col).alias("doc_id"), F.col(sig_col).alias("sh")),
-        n_chunks, width,
+    # the chunk rows feed the size count, both join sides and the chain
+    # window; checkpoint them once or each re-runs the signature upstream
+    chunked = _hamming_chunked(df, id_col, sig_col, max_hamming, n_bits).localCheckpoint(
+        eager=True
     )
     pairs = _bounded_self_pairs(
-        chunked, ["chunk", "cv"], max_bucket_size, payload="sh", chain_order=["sh"],
-        materialize=materialize,
+        chunked, ["chunk", "cv"], max_bucket_size, payload="sh", chain_order=["sh"]
     )
-    return (
-        pairs.select(
-            F.col("id_a").alias(f"{id_col}_a") if id_col != "doc_id" else F.col("id_a"),
-            F.col("id_b").alias(f"{id_col}_b") if id_col != "doc_id" else F.col("id_b"),
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return _hamming_verified(pairs, id_col, max_hamming)
 
 
 def incremental_hamming_pairs(
@@ -852,65 +858,21 @@ def incremental_hamming_pairs(
     signature index (``(id, sig)`` longs — audio fingerprints, simhash,
     any 64-bit sketch) plus within-batch pairs, WITHOUT re-sketching the
     corpus: stored signatures are chunk-exploded with codegen bit ops
-    (never re-derived from payload), the batch side is chunked once and
-    equi-joined on (chunk, cv), and verification is one
-    ``bit_count(xor) <= max_hamming``. Corpus chunk buckets larger than
-    ``max_bucket_size`` are truncated to their smallest ids (one window
-    pass over over-cap rows only): a new item needs ONE surviving link
-    into an existing duplicate family to be recognized. Output:
-    ``({id}_a, {id}_b, hamming)``, id_a < id_b; both-in-corpus pairs are
-    never produced."""
-    n_chunks = max_hamming + 1
-    if n_bits % n_chunks:
-        raise ValueError("n_bits must divide into max_hamming + 1 chunks")
-    width = n_bits // n_chunks
-
-    from pyspark.sql import Window
-
-    new_sig = new_df.select(F.col(id_col).alias("doc_id"), F.col(sig_col).alias("sh"))
-    new_chunked = _materialize(_hamming_chunked(new_sig, n_chunks, width), "checkpoint")
-    corpus_chunked = _hamming_chunked(
-        index.select(F.col(id_col).alias("doc_id"), F.col(sig_col).alias("sh")),
-        n_chunks, width,
+    (never re-derived from payload), the batch side is chunked and
+    checkpointed once, ``_index_pairs`` pairs them on (chunk, cv) under
+    its corpus-bucket cap, and verification is one
+    ``bit_count(xor) <= max_hamming``. Output: ``({id}_a, {id}_b,
+    hamming)``, id_a < id_b; both-in-corpus pairs are never produced. An
+    empty index gives exactly ``hamming_near_dups`` of the batch."""
+    new_chunked = _hamming_chunked(
+        new_df, id_col, sig_col, max_hamming, n_bits
+    ).localCheckpoint(eager=True)
+    corpus_chunked = _hamming_chunked(index, id_col, sig_col, max_hamming, n_bits)
+    pairs = _index_pairs(
+        new_chunked, corpus_chunked, ["chunk", "cv"], max_bucket_size,
+        payload="sh", chain_order=["sh"],
     )
-    # truncate degenerate corpus buckets (two-phase: map-side-combined
-    # counts, broadcast of over-cap keys, ONE window over over-cap rows)
-    sizes = corpus_chunked.groupBy("chunk", "cv").agg(F.count(F.lit(1)).alias("__bn"))
-    big = sizes.where(F.col("__bn") > max_bucket_size).select(
-        "chunk", "cv", F.lit(True).alias("__big")
-    )
-    tagged = corpus_chunked.join(big, ["chunk", "cv"], "left")
-    w = Window.partitionBy("chunk", "cv").orderBy("doc_id")
-    capped = tagged.where(F.col("__big").isNull()).drop("__big").unionByName(
-        tagged.where(F.col("__big"))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= max_bucket_size)
-        .drop("__big", "__rn")
-    )
-    cross = (
-        new_chunked.alias("a")
-        .join(capped.alias("b"), ["chunk", "cv"])
-        .where(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
-            F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    within = hamming_near_dups(
-        new_sig, "doc_id", "sh", max_hamming=max_hamming,
-        max_bucket_size=max_bucket_size, n_bits=n_bits,
-    )
-    out = cross.unionByName(within).distinct()
-    if id_col != "doc_id":
-        out = out.select(
-            F.col("id_a").alias(f"{id_col}_a"),
-            F.col("id_b").alias(f"{id_col}_b"),
-            "hamming",
-        )
-    return out
+    return _hamming_verified(pairs, id_col, max_hamming)
 
 
 # --------------------------------------------------------------------------
@@ -934,50 +896,12 @@ def embedding_near_dups(
     threshold: float = 0.95, n_planes: int = 12, seed: int = 42,
     max_bucket_size: int = 2000,
 ) -> DataFrame:
-    """Near-dup pairs by cosine ≥ threshold. LSH-bucketed: only vectors with
-    an identical sign pattern are compared (recall grows with fewer planes;
-    see ``embedding_near_dups_multiseed`` for the multi-seed recall path).
-    Buckets above ``max_bucket_size`` (mass-duplicated embeddings) fall
-    back to consecutive-pair chaining ordered by a FINER sign pattern (24
-    extra hyperplanes), so identical / near-identical embeddings sort
-    adjacent and their chain edges survive the cosine filter.
-
-    Plan shape: ONE Arrow-batched matmul per vector produces both the
-    coarse bucket and the fine chain-order (bit-split of a single
-    projection), the skinny ``(doc_id, bucket, order)`` stream — a few
-    bytes/row, no vector payload — is persisted once for the three
-    pair-generation consumers, and the embedding column is only joined
-    back onto the surviving candidate pairs for cosine scoring (|pairs| ≪
-    |corpus| after LSH). Output: id_a, id_b, cos."""
-    from jsschema_spark.functions.linalg import hyperplane_bucket_v, hyperplanes
-
-    n_fine = 24
-    planes = np.vstack([
-        hyperplanes(dim, n_planes, seed),
-        hyperplanes(dim, n_fine, seed + 1),
-    ])
-    # UDF in its own select so the matmul provably runs once per row; the
-    # bit-split into (bucket, order) is plain codegen on its output
-    skinny = df.select(
-        F.col(id_col).alias("doc_id"),
-        hyperplane_bucket_v(F.col(vec_col), planes).alias("__ord"),
-    ).select(
-        "doc_id",
-        F.col("__ord").bitwiseAND(F.lit((1 << n_planes) - 1)).alias("bucket"),
-        "__ord",
-    )
-    pairs = _bounded_self_pairs(
-        skinny, ["bucket"], max_bucket_size, chain_order=["__ord"],
-        materialize="checkpoint",
-    )
-    vt = df.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"))
-    return (
-        pairs.join(
-            vt.select(F.col("doc_id").alias("id_a"), F.col("v").alias("v_a")), "id_a"
-        )
-        .join(vt.select(F.col("doc_id").alias("id_b"), F.col("v").alias("v_b")), "id_b")
-        .select("id_a", "id_b", cosine(F.col("v_a"), F.col("v_b")).alias("cos"))
-        .where(F.col("cos") >= threshold)
+    """Near-dup pairs by cosine ≥ threshold: ``embedding_near_dups_multiseed``
+    with the one seed. Only vectors with an identical sign pattern over
+    ``n_planes`` hyperplanes are compared (recall grows with fewer planes,
+    or with more seeds). Output: id_a, id_b, cos."""
+    return embedding_near_dups_multiseed(
+        df, id_col, vec_col, dim, threshold, n_planes, (seed,), max_bucket_size
     )
 
 
@@ -986,32 +910,25 @@ def embedding_near_dups_multiseed(
     threshold: float = 0.95, n_planes: int = 12,
     seeds: "tuple[int, ...]" = (42, 1042, 2042),
     max_bucket_size: int = 2000,
-    single_pass: bool = True,
 ) -> DataFrame:
     """Multi-seed LSH union for recall control on *near*- (not exact-)
     duplicates: a single hyperplane set misses a pair whenever any plane
     separates the two vectors, so single-seed recall at cosine≈threshold
     is well below 1. K independent seeds each give an independent chance
     (miss probability multiplies: 1-r → (1-r)^K), and the union of the
-    per-seed verified pairs is deduplicated on (id_a, id_b) — cosine is
-    seed-independent, so the surviving values are identical across seeds.
+    per-seed candidates is verified once — cosine is seed-independent.
 
-    ``single_pass=True`` (default, the scale path): ONE widened matmul
-    computes all K seeds' sign patterns plus the fine chain-order bits
-    (K·n_planes + n_fine ≤ 63 packed into one long) — one corpus scan and
-    one skinny checkpoint instead of K, candidates explode per seed, and
-    cosine verification runs once over the distinct candidate union.
-    ``single_pass=False`` runs the per-seed pipelines and unions the
-    verified pairs — K scans, but per-seed recall is observable."""
-    if not single_pass:
-        out = None
-        for s in seeds:
-            p = embedding_near_dups(
-                df, id_col, vec_col, dim, threshold, n_planes, s, max_bucket_size
-            )
-            out = p if out is None else out.unionByName(p)
-        return out.dropDuplicates(["id_a", "id_b"])
-
+    Plan shape: ONE Arrow-batched matmul per vector computes all K seeds'
+    sign patterns plus 24 fine chain-order bits (K·n_planes + 24 ≤ 63,
+    packed into one long), so the corpus is scanned once. The skinny
+    ``(doc_id, __ord, seed, bucket)`` stream — a few bytes/row, no vector
+    payload — is checkpointed once for the pair-generation consumers.
+    Buckets above ``max_bucket_size`` (mass-duplicated embeddings) fall
+    back to consecutive-pair chaining ordered by the fine sign pattern, so
+    identical / near-identical embeddings sort adjacent and their chain
+    edges survive the cosine filter. The embedding column is only joined
+    back onto the distinct candidate pairs for cosine scoring (|pairs| ≪
+    |corpus| after LSH). Output: id_a, id_b, cos."""
     from jsschema_spark.functions.linalg import hyperplane_bucket_v, hyperplanes
 
     k = len(seeds)
@@ -1019,13 +936,15 @@ def embedding_near_dups_multiseed(
     if k * n_planes + n_fine > 63:
         raise ValueError(
             f"{k} seeds x {n_planes} planes + {n_fine} order bits exceed one "
-            "long; reduce seeds/planes or use single_pass=False"
+            "long; reduce seeds or planes"
         )
     planes = np.vstack(
         [hyperplanes(dim, n_planes, s) for s in seeds]
         + [hyperplanes(dim, n_fine, seeds[0] + 1)]
     )
     mask = (1 << n_planes) - 1
+    # UDF in its own select so the matmul provably runs once per row; the
+    # bit-split into (seed, bucket, order) is plain codegen on its output
     skinny = df.select(
         F.col(id_col).alias("doc_id"),
         hyperplane_bucket_v(F.col(vec_col), planes).alias("__sig"),
@@ -1045,8 +964,8 @@ def embedding_near_dups_multiseed(
         F.explode(seed_structs).alias("e"),
     ).select("doc_id", "__ord", F.col("e.seed").alias("seed"), F.col("e.bucket").alias("bucket"))
     pairs = _bounded_self_pairs(
-        banded, ["seed", "bucket"], max_bucket_size, chain_order=["__ord"],
-        materialize="checkpoint",
+        banded.localCheckpoint(eager=True), ["seed", "bucket"], max_bucket_size,
+        chain_order=["__ord"],
     )
     vt = df.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"))
     return (
@@ -1454,7 +1373,6 @@ def edit_distance_near_dups(
     pairs = _bounded_self_pairs(
         base, ["__block", "__band"], max_block_size,
         payload="__norm", chain_order=["__norm"],
-        materialize="none",  # upstream is one cheap projection
     )
     dist = F.levenshtein(F.col("__norm_a"), F.col("__norm_b"), int(max_dist))
     return (
@@ -1526,7 +1444,7 @@ def containment_pairs(
     # shingle expression interpreted at scan parallelism (event-log
     # measured: 5.2s CPU on a 2-task stage at sf1.0). The checkpoint rows
     # for empty docs cost a few bytes each instead.
-    sh = _materialize(sh, "checkpoint")  # shingled once; prefix, index and verify all consume it
+    sh = sh.localCheckpoint(eager=True)  # shingled once; prefix, index and verify all consume it
     sh = sh.where(F.size("sh") > 0)
     # Candidate generation runs entirely on 64-bit shingle ids
     # (xxhash64(g)) instead of ~30-char shingle strings: the Σ_prefix-df
@@ -1569,7 +1487,7 @@ def containment_pairs(
             ),
         )
     )
-    ranked = _materialize(ranked, "checkpoint")  # prefix + index both consume it
+    ranked = ranked.localCheckpoint(eager=True)  # prefix + index both consume it
     # prefix side, EXTENDED by the evidence count c=2: with
     # L = min(n, ⌊(1−t)·n⌋ + c) rarest shingles and at most f = ⌊(1−t)·n⌋
     # of the smaller side's shingles absent from a qualifying partner,

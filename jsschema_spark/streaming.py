@@ -8,6 +8,12 @@ violation sink via ``foreachBatch``, written idempotently per batch
 (``batch_id=``-partitioned overwrite) so at-least-once batch replays still
 yield exactly-once file output.
 
+Every ``start_*_sink`` runs through ``_start_batch_sink``: it processes
+what is available now (``availableNow``) in micro-batches and stops, so a
+scheduled re-run picks up from the checkpoint. Sinks that read their own
+earlier output (the admission indexes) read it through
+``_prior_batches``, which excludes the current batch's partition.
+
 At scale: the predicate columns add no state and no shuffle to the stream;
 watermark/windowed violation-rate aggregation is plain Spark on top of the
 ``valid`` column.
@@ -24,6 +30,45 @@ from pyspark.sql.streaming import StreamingQuery
 
 from jsschema_spark.compiler import TableValidator
 from jsschema_spark.schema import SchemaNode
+
+
+def _start_batch_sink(stream_df: DataFrame, process, checkpoint_dir: str) -> StreamingQuery:
+    """Start ``process(batch_df, batch_id)`` over every micro-batch of what
+    the source has now (``availableNow``), checkpointed in
+    ``checkpoint_dir``."""
+    return (
+        stream_df.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _prior_batches(spark, path: str, batch_id: int) -> Optional[DataFrame]:
+    """What the earlier batches wrote under ``path`` (its ``batch_id=``
+    partitions other than this batch's own, so a replay sees its first
+    attempt's input), or None when nothing has been written yet."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path).where(F.col("batch_id") != batch_id)
+    except AnalysisException:
+        return None
+
+
+def _keep_first_losers(pairs: DataFrame, batch_ids: DataFrame, a: str, b: str) -> DataFrame:
+    """Batch ids a near-dup admission drops, as one ``__drop`` column:
+    from a pair ``(a < b)`` with both ids in the batch the larger id
+    loses (keep-first); from a batch-vs-corpus pair the batch side ``a``
+    loses. ``batch_ids`` is a one-column frame of the batch's ids."""
+    ids = batch_ids.toDF("__bid_key")
+    in_batch_b = pairs.join(ids, pairs[b] == ids["__bid_key"], "left_semi").select(
+        F.col(b).alias("__drop")
+    )
+    in_corpus_b = pairs.join(ids, pairs[b] == ids["__bid_key"], "left_anti").select(
+        F.col(a).alias("__drop")
+    )
+    return in_batch_b.unionByName(in_corpus_b)
 
 
 def validate_stream(stream_df: DataFrame, schema: SchemaNode, with_violations: bool = True) -> DataFrame:
@@ -59,7 +104,6 @@ def start_violation_sink(
     output_dir: str,
     checkpoint_dir: str,
     id_cols: Optional[list[str]] = None,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """foreachBatch sink: per micro-batch, write exploded violation detail
     rows as parquet.
@@ -82,10 +126,7 @@ def start_violation_sink(
         # overwrite ONLY this batch's partition dir: idempotent on replay
         details.write.mode("overwrite").parquet(f"{output_dir}/batch_id={int(batch_id)}")
 
-    writer = stream_df.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_sink(stream_df, process, checkpoint_dir)
 
 
 def drift_stream(
@@ -199,7 +240,6 @@ def start_dedup_admission_sink(
     checkpoint_dir: str,
     id_col: str,
     text_col: str,
-    trigger_once: bool = True,
     min_quality: float = 0.0,
     redact: bool = False,
 ) -> StreamingQuery:
@@ -233,8 +273,6 @@ def start_dedup_admission_sink(
     (``text.quality_score``, a stateless codegen predicate) before
     dedup — rejected rows are never admitted and never enter the
     index."""
-    from pyspark.errors import AnalysisException
-
     from jsschema_spark.functions.dedup import incremental_exact_dedup
     from jsschema_spark.functions.text import content_fingerprint
 
@@ -247,11 +285,8 @@ def start_dedup_admission_sink(
                 F.col(text_col).isNotNull()
                 & (quality_score(F.col(text_col)) >= min_quality)
             )
-        try:
-            index = spark.read.parquet(index_dir).where(
-                F.col("batch_id") != int(batch_id)
-            )
-        except AnalysisException:
+        index = _prior_batches(spark, index_dir, int(batch_id))
+        if index is None:
             from jsschema_spark.localdf import local_df
 
             index = local_df(spark, [], "fingerprint long, doc_id long")
@@ -277,12 +312,7 @@ def start_dedup_admission_sink(
             .parquet(f"{index_dir}/batch_id={int(batch_id)}")
         )
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_sink(stream_df, process, checkpoint_dir)
 
 
 def start_near_dup_admission_sink(
@@ -295,7 +325,6 @@ def start_near_dup_admission_sink(
     threshold: float = 0.8,
     num_hashes: int = 64,
     bands: int = 16,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Streaming NEAR-dup admission: per micro-batch, drop rows whose
     true n-gram Jaccard against any previously admitted doc (via the
@@ -312,64 +341,39 @@ def start_near_dup_admission_sink(
     Same replay-idempotency contract as ``start_dedup_admission_sink``:
     both outputs are ``batch_id=``-partitioned overwrites and reads
     exclude the current batch's own partitions."""
-    from pyspark.errors import AnalysisException
-
     from jsschema_spark.functions.dedup import (
         incremental_near_duplicates_minhash,
         minhash_signatures,
     )
+    from jsschema_spark.localdf import local_df
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         bid = int(batch_id)
-        try:
-            index = spark.read.parquet(index_dir).where(F.col("batch_id") != bid)
-            corpus = spark.read.parquet(admitted_dir).where(F.col("batch_id") != bid)
-            have = index.limit(1).count() > 0
-        except AnalysisException:
-            have = False
         batch = batch_df.select(F.col(id_col), F.col(text_col))
-        if have:
-            dup_pairs = incremental_near_duplicates_minhash(
-                batch, corpus.select(id_col, text_col), index,
-                id_col, text_col, num_hashes, bands, threshold=threshold,
-            )
-            batch_ids = batch.select(F.col(id_col).alias("__bid_key"))
-            # a batch row is dropped if it near-dups ANY admitted doc, or a
-            # SMALLER-id row of its own batch (keep-first): losers are the
-            # larger pair side when both sides are in this batch, else the
-            # batch side of a batch-vs-corpus pair
-            in_batch_b = dup_pairs.join(
-                batch_ids, dup_pairs["id_b"] == batch_ids["__bid_key"], "left_semi"
-            ).select(F.col("id_b").alias("loser"))
-            in_corpus_b = dup_pairs.join(
-                batch_ids, dup_pairs["id_b"] == batch_ids["__bid_key"], "left_anti"
-            ).select(F.col("id_a").alias("loser"))
-            losers = in_batch_b.unionByName(in_corpus_b).distinct()
-            kept = batch_df.join(
-                losers, batch_df[id_col] == losers["loser"], "left_anti"
-            )
-        else:
-            from jsschema_spark.functions.dedup import near_duplicates_minhash
-
-            pairs = near_duplicates_minhash(
-                batch, id_col, text_col, num_hashes, bands, threshold=threshold
-            )
-            losers = pairs.select(F.col("id_b").alias("loser")).distinct()
-            kept = batch_df.join(
-                losers, batch_df[id_col] == losers["loser"], "left_anti"
-            )
+        # before the first admission there is no index: an empty one
+        # gives exactly the batch's own near-dup pairs
+        index = _prior_batches(spark, index_dir, bid)
+        if index is None:
+            index = local_df(spark, [], "doc_id long, sig array<long>")
+        corpus = _prior_batches(spark, admitted_dir, bid)
+        corpus = batch.limit(0) if corpus is None else corpus.select(id_col, text_col)
+        dup_pairs = incremental_near_duplicates_minhash(
+            batch, corpus, index, id_col, text_col, num_hashes, bands,
+            threshold=threshold,
+        )
+        # a batch row is dropped if it near-dups ANY admitted doc, or a
+        # SMALLER-id row of its own batch (keep-first)
+        losers = _keep_first_losers(
+            dup_pairs, batch.select(id_col), "id_a", "id_b"
+        ).distinct()
+        kept = batch_df.join(losers, batch_df[id_col] == losers["__drop"], "left_anti")
         kept.write.mode("overwrite").parquet(f"{admitted_dir}/batch_id={bid}")
         minhash_signatures(kept, id_col, text_col, num_hashes).write.mode(
             "overwrite"
         ).parquet(f"{index_dir}/batch_id={bid}")
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_sink(stream_df, process, checkpoint_dir)
 
 
 def _admit_embedding_batch(
@@ -410,18 +414,10 @@ def _admit_embedding_batch(
         F.explode(_multi_probe(F.col("bucket"), p_planes)).alias("bucket"),
     )
 
-    try:
-        corpus = (
-            spark.read.parquet(index_dir)
-            .where(F.col("batch_id") != bid)
-            .select("vec_id", F.col("embedding").alias("__cv"), "bucket")
-        )
-        have = corpus.limit(1).count() > 0
-    except AnalysisException:
-        have = False
-
+    corpus = _prior_batches(spark, index_dir, bid)
     losers = None
-    if have:
+    if corpus is not None and corpus.limit(1).count() > 0:
+        corpus = corpus.select("vec_id", F.col("embedding").alias("__cv"), "bucket")
         # static partition pruning: read only the probed bucket dirs
         probe = sorted(
             {r["bucket"] for r in probed.select("bucket").distinct().collect()}
@@ -471,7 +467,6 @@ def start_embedding_admission_sink(
     dim: int = 64,
     n_planes: int = 8,
     seed: int = 42,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Streaming VECTOR admission: per micro-batch, drop rows whose cosine
     against any previously admitted embedding (probed via the persisted
@@ -505,12 +500,7 @@ def start_embedding_admission_sink(
             id_col, vec_col, threshold, dim, n_planes, seed,
         )
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_sink(stream_df, process, checkpoint_dir)
 
 
 def _admit_audio_batch(
@@ -519,16 +509,12 @@ def _admit_audio_batch(
 ) -> None:
     """One micro-batch of the audio admission sink (module-level so a
     replayed batch is reproducible outside the stream)."""
-    from pyspark.errors import AnalysisException
-
-    from jsschema_spark.audio import make_audio_fingerprint_udf
+    from jsschema_spark.audio import audio_fingerprint_udf
     from jsschema_spark.functions.dedup import incremental_hamming_pairs
 
-    spark = batch_df.sparkSession
-    fp_udf = make_audio_fingerprint_udf()
     fps = batch_df.select(
         F.col(clip_id_col),
-        fp_udf(F.col(clip_id_col), F.col(bytes_col)).alias("__f"),
+        audio_fingerprint_udf(F.col(clip_id_col), F.col(bytes_col)).alias("__f"),
     ).select(
         clip_id_col,
         F.col("__f.fp").alias("fp"),
@@ -540,33 +526,21 @@ def _admit_audio_batch(
         F.col(clip_id_col).alias("__drop")
     )
     batch_fp = fps.where(F.col("decode_ok")).select(clip_id_col, "fp")
-    try:
-        index = spark.read.parquet(index_dir).where(F.col("batch_id") != bid)
-        have = index.limit(1).count() > 0
-    except AnalysisException:
-        have = False
-    if have:
-        pairs = incremental_hamming_pairs(
-            batch_fp, index.select(clip_id_col, "fp"), clip_id_col, "fp",
-            max_hamming=max_hamming,
+    # before the first admission there is no index: an empty one gives
+    # exactly the batch's own near-dup pairs
+    index = _prior_batches(batch_df.sparkSession, index_dir, bid)
+    pairs = incremental_hamming_pairs(
+        batch_fp,
+        batch_fp.limit(0) if index is None else index.select(clip_id_col, "fp"),
+        clip_id_col, "fp", max_hamming=max_hamming,
+    )
+    losers = (
+        _keep_first_losers(
+            pairs, batch_fp.select(clip_id_col), f"{clip_id_col}_a", f"{clip_id_col}_b"
         )
-    else:
-        from jsschema_spark.functions.dedup import hamming_near_dups
-
-        pairs = hamming_near_dups(
-            batch_fp, clip_id_col, "fp", max_hamming=max_hamming
-        )
-    # keep-first: the larger pair side loses when both are in this batch;
-    # a batch-vs-corpus pair always drops the batch side
-    batch_ids = batch_fp.select(F.col(clip_id_col).alias("__bid_key"))
-    a, b = f"{clip_id_col}_a", f"{clip_id_col}_b"
-    in_batch_b = pairs.join(
-        batch_ids, pairs[b] == batch_ids["__bid_key"], "left_semi"
-    ).select(F.col(b).alias("__drop"))
-    in_corpus_b = pairs.join(
-        batch_ids, pairs[b] == batch_ids["__bid_key"], "left_anti"
-    ).select(F.col(a).alias("__drop"))
-    losers = in_batch_b.unionByName(in_corpus_b).unionByName(undecodable).distinct()
+        .unionByName(undecodable)
+        .distinct()
+    )
     kept = batch_df.join(
         losers, batch_df[clip_id_col] == losers["__drop"], "left_anti"
     )
@@ -589,7 +563,6 @@ def start_audio_admission_sink(
     clip_id_col: str = "clip_id",
     bytes_col: str = "bytes",
     max_hamming: int = 7,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Streaming AUDIO admission: per micro-batch, fingerprint the clips
     (gain-invariant band-energy sketch, ``audio.band_energy_fingerprint``)
@@ -615,12 +588,7 @@ def start_audio_admission_sink(
             clip_id_col, bytes_col, max_hamming,
         )
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_sink(stream_df, process, checkpoint_dir)
 
 
 def start_contract_drift_sink(
@@ -629,7 +597,6 @@ def start_contract_drift_sink(
     out_dir: str,
     checkpoint_dir: str,
     enum_max: int = 8,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Streaming CONTRACT monitoring: per micro-batch, profile the batch
     with the schema inferrer (``infer.schema_report``) and diff it against
@@ -654,12 +621,7 @@ def start_contract_drift_sink(
         drift = contract_drift(reference, schema_report(batch_df, enum_max))
         drift.write.mode("overwrite").parquet(f"{out_dir}/batch_id={int(batch_id)}")
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_sink(stream_df, process, checkpoint_dir)
 
 
 def violation_streaks(
@@ -759,7 +721,6 @@ def start_volume_anomaly_sink(
     period: str = "day",
     trailing: int = 7,
     min_history: int = 3,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Streaming ingest-VOLUME monitoring: per micro-batch, (1) write the
     batch's per-period row counts to ``counts_dir/batch_id=N`` (overwrite
@@ -798,12 +759,7 @@ def start_volume_anomaly_sink(
             f"{out_dir}/batch_id={int(batch_id)}"
         )
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_sink(stream_df, process, checkpoint_dir)
 
 
 def start_transcode_sink(
@@ -815,7 +771,6 @@ def start_transcode_sink(
     codec_col: str = "codec",
     bytes_col: str = "bytes",
     target_codec: str = "flac",
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Streaming ARCHIVE transcode: per micro-batch, re-encode each clip's
     payload into ``target_codec`` through the lossless PCM interchange
@@ -908,9 +863,4 @@ def start_transcode_sink(
         finally:
             enc.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_sink(stream_df, process, checkpoint_dir)

@@ -138,7 +138,7 @@ def test_audio_profile_scan(spark, tmp_path):
 
     from jsschema_spark.audio import (
         audio_profile_scan,
-        make_audio_profile_udf,
+        audio_profile_udf,
         pcm_profile,
         wav_decode,
     )
@@ -175,10 +175,9 @@ def test_audio_profile_scan(spark, tmp_path):
     assert mismatch.count() == 0
 
     # column-UDF form agrees on the same stored bytes
-    udf = make_audio_profile_udf()
     ipc = (
         spark.read.parquet(out)
-        .withColumn("p", udf(F.col("clip_id"), F.col("bytes")))
+        .withColumn("p", audio_profile_udf(F.col("clip_id"), F.col("bytes")))
         .select("clip_id", F.col("p.rms_dbfs").alias("rms2"), F.col("p.peak").alias("peak2"))
     )
     diff = prof.join(ipc, "clip_id").where(

@@ -600,22 +600,32 @@ def test_multiseed_lsh_union_improves_recall(spark, emb):
             seeds=(42, 1042, 2042),
         ).collect()
     }
-    # the K-scan variant must behave equivalently (same planes, separate
-    # matmuls; candidates can differ only on sign near-ties)
-    multi_kscan = {
-        (r.id_a, r.id_b)
-        for r in D.embedding_near_dups_multiseed(
-            df, "vec_id", "embedding", 64, threshold=thr, n_planes=12,
-            seeds=(42, 1042, 2042), single_pass=False,
-        ).collect()
-    }
-    assert single <= brute and multi <= brute and multi_kscan <= brute
+    assert single <= brute and multi <= brute
     r_single = len(single) / len(brute)
     r_multi = len(multi) / len(brute)
     assert r_single < 1.0  # near-dups DO fall out of single-seed buckets here
     assert r_multi >= r_single
     assert r_multi >= 0.8  # three seeds recover the bulk of the pairs
-    assert len(multi_kscan) / len(brute) >= 0.8
+
+
+def test_embedding_one_seed_is_multiseed(spark, emb):
+    """``embedding_near_dups`` is the one-seed multiseed run: same pairs and
+    cosines, also when over-cap buckets chain (few planes, small cap)."""
+    df = _near_identical_corpus(spark, emb)
+    kw = dict(threshold=0.995, n_planes=4, max_bucket_size=10)
+    one = D.embedding_near_dups(df, "vec_id", "embedding", 64, seed=7, **kw)
+    multi = D.embedding_near_dups_multiseed(
+        df, "vec_id", "embedding", 64, seeds=(7,), **kw
+    )
+    assert one.count() > 0
+    assert one.exceptAll(multi).count() == 0 and multi.exceptAll(one).count() == 0
+
+
+def test_embedding_sign_bits_must_fit_one_long(spark, emb):
+    # n_planes + 24 chain-order bits are packed into one signed long
+    D.embedding_near_dups(emb, "vec_id", "embedding", 64, n_planes=39)
+    with pytest.raises(ValueError, match="exceed one long"):
+        D.embedding_near_dups(emb, "vec_id", "embedding", 64, n_planes=41)
 
 
 # ------------------------------------------------- incremental (index) dedup
@@ -671,6 +681,88 @@ def test_incremental_minhash_index_append_round(spark, docs, tmp_path):
     assert any(
         {r.id_a, r.id_b} == {b3.doc_id, b3.doc_id - 900_000} for r in pairs
     ), pairs
+
+
+def _fingerprint_families(spark, n_families=8, size=20, seed=5):
+    """``(clip_id, fp)`` rows in families of near-identical 64-bit
+    signatures: a family shares a base, and two of three members flip one
+    random bit of it. Every chunk bucket of a family holds most of its
+    members, so a small bucket cap takes the chain path."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    bases = rng.integers(-(2**62), 2**62, size=n_families)
+    rows = []
+    for i in range(n_families * size):
+        fp = int(bases[i % n_families])
+        if i % 3:
+            fp ^= 1 << int(rng.integers(0, 63))
+        rows.append((f"c{i:04d}", fp))
+    return spark.createDataFrame(rows, "clip_id string, fp long")
+
+
+def test_incremental_pairs_with_empty_index_equal_batch_only(spark, docs_with_dups):
+    """Against an empty index the incremental forms give exactly the
+    batch-only pairs, chained over-cap buckets included."""
+    fps = _fingerprint_families(spark)
+    inc = D.incremental_hamming_pairs(
+        fps, fps.limit(0), "clip_id", "fp", max_hamming=7, max_bucket_size=5
+    )
+    batch = D.hamming_near_dups(fps, "clip_id", "fp", max_hamming=7, max_bucket_size=5)
+    n = batch.count()
+    assert 0 < n < 8 * 190  # chained: fewer than all in-family pairs
+    assert inc.exceptAll(batch).count() == 0 and batch.exceptAll(inc).count() == 0
+
+    boiler = spark.range(12).select(
+        (F.col("id") + 3_000_000).alias("doc_id"),
+        F.lit("one boilerplate footer repeated on every page of the site").alias("text"),
+    )
+    df = docs_with_dups.select("doc_id", "text").unionByName(boiler)
+    empty = spark.createDataFrame([], "doc_id long, sig array<long>")
+    inc = D.incremental_minhash_pairs(df, empty, "doc_id", "text", max_bucket_size=5)
+    batch = D.minhash_lsh_pairs(df, "doc_id", "text", max_bucket_size=5)
+    # the 12 identical docs chain (at most 11 pairs) instead of all 66
+    n_boiler = batch.where(F.col("id_a") >= 3_000_000).count()
+    assert 0 < n_boiler <= 11
+    assert inc.exceptAll(batch).count() == 0 and batch.exceptAll(inc).count() == 0
+
+
+def _jobs_while_building(spark, group, build):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_incremental_pairs_checkpoint_the_batch_once(spark, docs, tmp_path):
+    """Building the incremental pair DataFrame runs only the batch's one
+    eager checkpoint: a narrow chunk stream for hamming (one job), and the
+    bands over the shuffled signature merge for minhash (two jobs)."""
+    fps = _fingerprint_families(spark)
+    index = _fingerprint_families(spark, seed=6).select(
+        F.concat(F.lit("i"), "clip_id").alias("clip_id"), "fp"
+    )
+    n = _jobs_while_building(
+        spark, "incremental-hamming-build",
+        lambda: D.incremental_hamming_pairs(fps, index, "clip_id", "fp", max_hamming=7),
+    )
+    assert n == 1
+
+    base = docs.select("doc_id", "text")
+    idx_path = str(tmp_path / "sig_index")
+    D.write_minhash_index(base.where(F.col("doc_id") % 2 == 0), idx_path, "doc_id", "text")
+    sig_index = spark.read.parquet(idx_path)
+    new = base.where(F.col("doc_id") % 2 == 1)
+    n = _jobs_while_building(
+        spark, "incremental-minhash-build",
+        lambda: D.incremental_minhash_pairs(new, sig_index, "doc_id", "text"),
+    )
+    assert n == 2
 
 
 def test_incremental_exact_dedup(spark, docs, tmp_path):
