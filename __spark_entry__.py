@@ -2536,23 +2536,13 @@ def q_ab_test_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_audio_normalize_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-normalization TRANSFORM verified end-to-end: mixed-rate
-    (8/16/44.1 kHz), mixed-gain (quiet/hot/reference) synth WAVs are
-    resampled to 16 kHz and gain-normalized to −20 dBFS
-    (audio.resample_linear + normalize_gain — the fix path for what the
-    gates catch), then re-DECODED and re-profiled in the same Arrow
-    stage; a clip counts 'normalized' only if its re-encoded WAV decodes
-    at 16 kHz with RMS within 1 dB of target. The analytic oracle demands
-    every decodable clip make it — certifying synth→normalize→encode→
-    decode→measure round-trip."""
-    from jsschema_spark.audio import (
-        normalize_gain,
-        pcm_profile,
-        resample_linear,
-        wav_decode,
-        wav_encode,
-    )
+def _audio_normalize(spark: SparkSession, sf_dir: str, resample) -> DataFrame:
+    """Mixed-rate (8/16/44.1 kHz), mixed-gain (quiet/hot/reference) synth
+    WAVs resampled to 16 kHz by ``resample``, gain-normalized to −20
+    dBFS, then re-DECODED and re-profiled in the same Arrow stage; a clip
+    counts 'normalized' only if its re-encoded WAV decodes at 16 kHz with
+    RMS within 1 dB of target. Counts per (orig_sr, status)."""
+    from jsschema_spark.audio import normalize_gain, pcm_profile, wav_decode, wav_encode
 
     docs = _clip_params(spark, sf_dir)
     i = F.col("doc_id")
@@ -2577,7 +2567,7 @@ def q_audio_normalize_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pcm = (amp * np.sin(2.0 * np.pi * 440.0 * t)).astype(np.int16)
                 wav = wav_encode(pcm, sr)
                 sr_d, pcm_d = wav_decode(wav)
-                pcm_n = normalize_gain(resample_linear(pcm_d, sr_d, 16000), -20.0)
+                pcm_n = normalize_gain(resample(pcm_d, sr_d, 16000), -20.0)
                 sr_v, pcm_v = wav_decode(wav_encode(pcm_n, 16000))
                 rms_dbfs, _, _, _ = pcm_profile(pcm_v)
                 ok = sr_v == 16000 and abs(rms_dbfs - (-20.0)) < 1.0
@@ -2591,6 +2581,17 @@ def q_audio_normalize_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.groupBy("orig_sr", "status").agg(
         F.count(F.lit(1)).cast("long").alias("n_clips")
     )
+
+
+def q_audio_normalize_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-normalization TRANSFORM verified end-to-end (see
+    ``_audio_normalize``) with linear-interpolation resampling
+    (audio.resample_linear + normalize_gain — the fix path for what the
+    gates catch). The analytic oracle demands every decodable clip make
+    it — certifying synth→normalize→encode→decode→measure round-trip."""
+    from jsschema_spark.audio import resample_linear
+
+    return _audio_normalize(spark, sf_dir, resample_linear)
 
 
 def q_multi_drift_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3411,51 +3412,9 @@ def q_audio_normalize_sinc_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract is resampler-independent, so this pins that the higher-
     quality kernel also meets it end-to-end (synth->resample->gain->
     encode->decode->measure) at every rate pair."""
-    from jsschema_spark.audio import (
-        normalize_gain,
-        pcm_profile,
-        resample_sinc,
-        wav_decode,
-        wav_encode,
-    )
+    from jsschema_spark.audio import resample_sinc
 
-    docs = _clip_params(spark, sf_dir)
-    i = F.col("doc_id")
-    params = docs.select(
-        F.format_string("clip-%012d", i).alias("clip_id"),
-        (i % 4).cast("int").alias("kind"),
-    )
-
-    def gen(batches):
-        import numpy as np
-
-        cfg = {0: (8000, 500.0), 1: (44100, 28000.0), 2: (16000, 8000.0)}
-        for pdf in batches:
-            out = {"orig_sr": [], "status": []}
-            for k in pdf["kind"]:
-                if k == 3:
-                    out["orig_sr"].append(0)
-                    out["status"].append("undecodable")
-                    continue
-                sr, amp = cfg[int(k)]
-                t = np.arange(sr // 2, dtype=np.float64) / sr
-                pcm = (amp * np.sin(2.0 * np.pi * 440.0 * t)).astype(np.int16)
-                wav = wav_encode(pcm, sr)
-                sr_d, pcm_d = wav_decode(wav)
-                pcm_n = normalize_gain(resample_sinc(pcm_d, sr_d, 16000), -20.0)
-                sr_v, pcm_v = wav_decode(wav_encode(pcm_n, 16000))
-                rms_dbfs, _, _, _ = pcm_profile(pcm_v)
-                ok = sr_v == 16000 and abs(rms_dbfs - (-20.0)) < 1.0
-                out["orig_sr"].append(sr)
-                out["status"].append("normalized" if ok else "off_target")
-            import pandas as _pd
-
-            yield _pd.DataFrame(out)
-
-    feats = params.mapInPandas(gen, "orig_sr int, status string")
-    return feats.groupBy("orig_sr", "status").agg(
-        F.count(F.lit(1)).cast("long").alias("n_clips")
-    )
+    return _audio_normalize(spark, sf_dir, resample_sinc)
 
 
 def q_vocab_richness_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

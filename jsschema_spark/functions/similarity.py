@@ -1,24 +1,28 @@
-"""Approximate-nearest-neighbor similarity search over an embedding column.
+"""Nearest-neighbor similarity search over an embedding column.
 
-* ``brute_force_topk`` — exact cosine top-k: broadcast the (small) query set,
-  one pass over the corpus, per-query top-k via window. The baseline and the
-  oracle for the approximate paths. Corpus-side work is embarrassingly
-  parallel; the only shuffle is the final per-query top-k (tiny: k rows per
-  partition per query after partial filtering).
-* ``lsh_topk`` — the scale path: random-hyperplane buckets (deterministic
-  literal planes) with multi-probe (flip each bit once ⇒ dim+1 probes),
-  so queries only score vectors in matching buckets. Equi-join on bucket id
-  → Catalyst picks broadcast/SMJ; at 10^12 vectors the corpus side is
-  bucket-partitioned once and reused across query batches.
-* ``ivf_topk`` — IVF variant: corpus assigned to the nearest of C seeded
-  centroids (centroids sampled deterministically from the corpus itself),
-  queries probe the nprobe nearest centroids.
+``brute_force_topk`` is the exact cosine top-k and the oracle for the
+approximate paths, which share ONE index core. An index row is
+``(vec_id, embedding, key)``; the key is a hyperplane-LSH bucket
+(``_lsh_key``) or the nearest IVF centroid (``_ivf_key``), one
+Arrow-batched matmul per batch (see linalg), coalesced to ``-1``. A query
+batch expands to its probe keys (``_probes``: the base bucket and its
+bit flips — n_planes+1 probes at ``probe_bits=1`` — or the ``nprobe``
+nearest cells), is broadcast, equi-joined to the index on the key, scored
+by cosine and ranked (``_probe_topk``). Its users:
+
+* in memory — ``lsh_topk`` / ``ivf_topk`` key the corpus per call;
+* persisted — ``lsh_build`` / ``ivf_build`` write the key-partitioned
+  index once (``_write_index``), ``*_append`` key a new batch against the
+  stored planes or centroids, ``*_search`` read only the probed key
+  directories (``_probed``) and never touch the raw corpus;
+* streaming — ``streaming._admit_embedding_batch`` probes the LSH index of
+  the earlier micro-batches and appends the admitted rows to it.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsschema_spark.functions.dedup import cosine
@@ -28,10 +32,18 @@ from jsschema_spark.functions.linalg import (
     nearest_cell,
     nearest_cells,
 )
+from jsschema_spark.localdf import local_df
 
 # brute_force_topk collects its query batch to the driver; a batch larger
 # than this is an ANN workload (ivf_search / lsh_search), not a batch
 _MAX_QUERY_ROWS = 10_000
+
+
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of ``(query_id, vec_id, cos)`` rows: ``rank`` by
+    cosine descending, ties broken by the smaller ``vec_id``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def brute_force_topk(
@@ -79,8 +91,7 @@ def brute_force_topk(
         scored = c.crossJoin(q).select(
             "query_id", "vec_id", cosine(F.col("cv"), F.col("qv")).alias("cos")
         )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-        return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+        return _ranked(scored, k)
 
     d = dims.pop()
     qm = np.array([list(r["qv"]) for r in qrows], dtype=np.float64)
@@ -123,8 +134,100 @@ def brute_force_topk(
     scored = pruned.crossJoin(q).select(
         "query_id", "vec_id", cosine(F.col("cv"), F.col("qv")).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _ranked(scored, k)
+
+
+# --------------------------------------------------------------------------
+# the index core: keys, index rows, probes, the probe join, the index write
+
+def _lsh_key(vec: Column, planes) -> Column:
+    """Hyperplane-LSH bucket of ``vec``, ``-1`` for a null vector.
+
+    coalesce(-1): a provably non-null join key, so the join's inferred
+    isnotnull filter constant-folds away instead of being pushed below the
+    projection — which would make the matmul UDF evaluate TWICE (once for
+    the filter, once for the project). -1 is unreachable from any real
+    bucket or its bit-flip probes, so null vectors match nothing; as a
+    partition value it keeps the directory layout clean."""
+    return F.coalesce(hyperplane_bucket_v(vec, planes), F.lit(-1).cast("long"))
+
+
+def _ivf_key(vec: Column, cents: list[list[float]]) -> Column:
+    """Nearest IVF cell of ``vec``, ``-1`` (never probed: real cells are
+    >= 0) for a null vector — non-null for the reason given in
+    ``_lsh_key``."""
+    return F.coalesce(nearest_cell(vec, cents), F.lit(-1))
+
+
+def _index_rows(df: DataFrame, id_col: str, vec_col: str, key: Column, key_col: str) -> DataFrame:
+    """The index rows of ``df``: ``(vec_id, embedding, <key_col>)`` with
+    ``key`` (an ``_lsh_key`` / ``_ivf_key`` column) as the key."""
+    return df.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"), key.alias(key_col)
+    )
+
+
+def _probes(queries: DataFrame, query_id: str, vec_col: str, key: str, probe_keys: Column) -> DataFrame:
+    """One ``(query_id, qv, <key>)`` row per query and probed key, from
+    the ``probe_keys`` array column."""
+    return queries.select(
+        F.col(query_id).alias("query_id"), F.col(vec_col).alias("qv"),
+        F.explode(probe_keys).alias(key),
+    )
+
+
+def _probed(index: DataFrame, probes: DataFrame, key: str) -> DataFrame:
+    """A persisted ``index`` cut to the keys ``probes`` holds. The probed
+    key set is tiny (≤ |queries|·probes ints): it is collected and pushed
+    into the index scan as a STATIC partition filter, so only the probed
+    key directories are read (provable in-plan as PartitionFilters;
+    runtime DPP does not fire through the Generate+UDF build side)."""
+    keys = sorted({r[key] for r in probes.select(key).distinct().collect()})
+    return index.where(F.col(key).isin(keys))
+
+
+def _probe_topk(index: DataFrame, probes: DataFrame, key: str, k: int) -> DataFrame:
+    """Top-k of each query over the index rows sharing one of its probe
+    keys: broadcast equi-join on the key, cosine, one row per (query,
+    vector) however many probes hit it, then ``_ranked``."""
+    cands = index.select("vec_id", F.col("embedding").alias("cv"), key)
+    scored = cands.join(F.broadcast(probes), key).select(
+        "query_id", "vec_id", cosine(F.col("cv"), F.col("qv")).alias("cos")
+    )
+    return _ranked(scored.dropDuplicates(["query_id", "vec_id"]), k)
+
+
+def _write_index(rows: DataFrame, path: str, key: str, mode: str) -> None:
+    """Write index rows partitioned by ``key`` with ``mode``.
+
+    Hash-repartition on the partition column BEFORE the dynamic-partition
+    write: without it every write task emits a file per key it sees
+    (#tasks × #keys small files — at 10^12 rows, millions); with it each
+    key lands in exactly one task, so one write adds one file per key (an
+    oversized key splits via spark.sql.files.maxRecordsPerFile, not task
+    fan-out). The explicit numPartitions matters: a bare repartition(key)
+    is AQE-coalescible, and at bench scale the byte-tiny shuffle collapsed
+    to ONE task writing every key file sequentially (~4s of pure file ops,
+    zero CPU); REPARTITION_BY_NUM keeps the write parallel while
+    preserving the one-task-per-key file bound."""
+    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, key).write.mode(
+        mode
+    ).partitionBy(key).parquet(path)
+
+
+def _lsh_meta(spark: SparkSession, path: str) -> tuple[int, int, int]:
+    """``(dim, n_planes, seed)`` from the ``_meta`` sidecar of the LSH
+    index at ``path``; raises ``AnalysisException`` when there is none."""
+    m = spark.read.parquet(f"{path}/_meta").collect()[0]
+    return m["dim"], m["n_planes"], m["seed"]
+
+
+def _write_lsh_meta(spark: SparkSession, path: str, dim: int, n_planes: int, seed: int) -> None:
+    """Write the ``_meta`` sidecar: the planes are deterministic from the
+    seed, so three ints are the whole LSH index parameter set."""
+    local_df(
+        spark, [(dim, n_planes, seed)], "dim int, n_planes int, seed int"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
 
 
 def _multi_probe(base, n_planes: int, probe_bits: int = 1):
@@ -169,33 +272,12 @@ def lsh_topk(
     over a trained index (recall@10 0.99 at nprobe=4) — LSH's job in this
     engine is near-dup candidate generation at cosine ≥ ~0.99."""
     planes = hyperplanes(dim, n_planes, seed)
-    # coalesce(-1): a provably non-null join key, so the join's inferred
-    # isnotnull filter constant-folds away instead of being pushed below
-    # the projection — which would make the corpus-side matmul UDF
-    # evaluate TWICE (once for the filter, once for the project).
-    # -1 is unreachable from any real bucket or its 1-bit probes, so null
-    # vectors still match nothing.
-    c = corpus.select(
-        F.col(corpus_id).alias("vec_id"), F.col(vec_col).alias("cv"),
-        F.coalesce(hyperplane_bucket_v(F.col(vec_col), planes), F.lit(-1).cast("long")).alias("bucket"),
+    index = _index_rows(corpus, corpus_id, vec_col, _lsh_key(F.col(vec_col), planes), "bucket")
+    probes = _probes(
+        queries, query_id, vec_col, "bucket",
+        _multi_probe(hyperplane_bucket_v(F.col(vec_col), planes), n_planes, probe_bits),
     )
-    q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.explode(
-            _multi_probe(
-                hyperplane_bucket_v(F.col(vec_col), planes), n_planes, probe_bits
-            )
-        ).alias("bucket"),
-    )
-    scored = c.join(F.broadcast(q), "bucket").select(
-        "query_id", "vec_id", cosine(F.col("cv"), F.col("qv")).alias("cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.dropDuplicates(["query_id", "vec_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _probe_topk(index, probes, "bucket", k)
 
 
 def ivf_train(
@@ -215,22 +297,17 @@ def ivf_train(
     centroids."""
     import math
 
-    rows = (
-        corpus.select(vec_col)
-        .orderBy(F.xxhash64(F.col(corpus_id), F.lit(seed)))
-        .limit(n_centroids)
-        .collect()
-    )
-    if not rows:
+    sample = _ivf_centroids(corpus, n_centroids, seed, corpus_id, vec_col, None)
+    if not sample:
         raise ValueError("ivf_train: empty corpus")
-    # a corpus smaller than n_centroids can only seed len(rows) clusters
-    n_centroids = min(n_centroids, len(rows))
+    # a corpus smaller than n_centroids can only seed len(sample) clusters
+    n_centroids = len(sample)
 
     def normalize(v: list[float]) -> list[float]:
         n = math.sqrt(sum(x * x for x in v)) or 1.0
         return [x / n for x in v]
 
-    cents = [normalize([float(x) for x in r[0]]) for r in rows]
+    cents = [normalize(c) for c in sample]
     v = F.col(vec_col)
     for _ in range(max(0, iters)):
         # assignment: one Arrow-batched matmul per batch (see linalg) —
@@ -285,27 +362,9 @@ def ivf_topk(
     For repeated querying persist the assignment once with ``ivf_build``
     and search it with ``ivf_search`` (no re-assignment scan)."""
     cents = _ivf_centroids(corpus, n_centroids, seed, corpus_id, vec_col, centroids)
-
-    # coalesce(-1): non-null join key so the inferred isnotnull filter
-    # cannot be pushed below the projection and double-evaluate the
-    # corpus-side matmul UDF (see lsh_topk); real cells are always >= 0
-    c = corpus.select(
-        F.col(corpus_id).alias("vec_id"), F.col(vec_col).alias("cv"),
-        F.coalesce(nearest_cell(F.col(vec_col), cents), F.lit(-1)).alias("cell"),
-    )
-    q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.explode(nearest_cells(F.col(vec_col), cents, nprobe)).alias("cell"),
-    )
-    scored = c.join(F.broadcast(q), "cell").select(
-        "query_id", "vec_id", cosine(F.col("cv"), F.col("qv")).alias("cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.dropDuplicates(["query_id", "vec_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    index = _index_rows(corpus, corpus_id, vec_col, _ivf_key(F.col(vec_col), cents), "cell")
+    probes = _probes(queries, query_id, vec_col, "cell", nearest_cells(F.col(vec_col), cents, nprobe))
+    return _probe_topk(index, probes, "cell", k)
 
 
 # --------------------------------------------------------------------------
@@ -315,9 +374,9 @@ def ivf_topk(
 # assignment (cell / bucket of every vector). A real user queries an index
 # repeatedly; recomputing the assignment per query batch wastes a full
 # corpus scan + matmul each time. ``*_build`` writes the assignment ONCE as
-# a cell/bucket-partitioned parquet table (directory-partitioned: a search
-# that probes p cells reads exactly p directories — partition pruning, no
-# full scan), with the index parameters in an underscore-prefixed sidecar
+# a cell/bucket-partitioned parquet table (``_write_index``: a search that
+# probes p keys reads exactly p directories — partition pruning, no full
+# scan), with the index parameters in an underscore-prefixed sidecar
 # (`_centroids` / `_meta`) that Spark's file index ignores when reading the
 # main table. ``*_search`` never touches the raw corpus: its only
 # vectorized work is on the (tiny, broadcast) query batch.
@@ -337,27 +396,8 @@ def ivf_build(
         if train
         else _ivf_centroids(corpus, n_centroids, seed, corpus_id, vec_col, None)
     )
-    # -1 = the null-vector cell (never probed); keeps the partition column
-    # non-null and the directory layout clean
-    assigned = corpus.select(
-        F.col(corpus_id).alias("vec_id"), F.col(vec_col).alias("embedding"),
-        F.coalesce(nearest_cell(F.col(vec_col), cents), F.lit(-1)).alias("cell"),
-    )
-    # hash-repartition on the partition column BEFORE the dynamic-partition
-    # write: without it every write task emits a file per cell it sees
-    # (#tasks × #cells small files — at 10^12 rows, millions); with it each
-    # cell lands in exactly one task, so file count = #cells (an oversized
-    # cell splits via spark.sql.files.maxRecordsPerFile, not task fan-out).
-    # The explicit numPartitions matters: a bare repartition("cell") is
-    # AQE-coalescible, and at bench scale the byte-tiny shuffle collapsed
-    # to ONE task writing every cell file sequentially (~4s of pure file
-    # ops, zero CPU); REPARTITION_BY_NUM keeps the write parallel while
-    # preserving the one-task-per-cell file bound.
-    assigned.repartition(
-        assigned.sparkSession.sparkContext.defaultParallelism, "cell"
-    ).write.mode("overwrite").partitionBy("cell").parquet(path)
-    from jsschema_spark.localdf import local_df
-
+    rows = _index_rows(corpus, corpus_id, vec_col, _ivf_key(F.col(vec_col), cents), "cell")
+    _write_index(rows, path, "cell", "overwrite")
     local_df(
         spark, [(i, list(c)) for i, c in enumerate(cents)],
         "cid int, centroid array<double>",
@@ -373,16 +413,8 @@ def ivf_append(new_vectors: DataFrame, path: str,
     never rescanned. Centroids are frozen at build time; retrain with
     ``ivf_build`` when drift degrades cell balance."""
     cents = ivf_load_centroids(new_vectors.sparkSession, path)
-    (
-        new_vectors.select(
-            F.col(corpus_id).alias("vec_id"), F.col(vec_col).alias("embedding"),
-            F.coalesce(nearest_cell(F.col(vec_col), cents), F.lit(-1)).alias("cell"),
-        )
-        .repartition("cell")  # one file per touched cell, not per task×cell
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(path)
-    )
+    rows = _index_rows(new_vectors, corpus_id, vec_col, _ivf_key(F.col(vec_col), cents), "cell")
+    _write_index(rows, path, "cell", "append")
 
 
 def ivf_load_centroids(spark: SparkSession, path: str) -> list[list[float]]:
@@ -399,26 +431,8 @@ def ivf_search(
     read back, never recomputed) and score within the probed partitions."""
     spark = queries.sparkSession
     cents = ivf_load_centroids(spark, path)
-    idx = spark.read.parquet(path).select("vec_id", F.col("embedding").alias("cv"), "cell")
-    q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.explode(nearest_cells(F.col(vec_col), cents, nprobe)).alias("cell"),
-    )
-    # the probed cell set is tiny (≤ |queries|·nprobe ints) — collect it and
-    # push a STATIC partition filter into the index scan, so only the probed
-    # cell directories are ever read (provable in-plan as PartitionFilters;
-    # runtime DPP does not fire through the Generate+UDF build side)
-    probe = sorted({r["cell"] for r in q.select("cell").distinct().collect()})
-    idx = idx.where(F.col("cell").isin(probe))
-    scored = idx.join(F.broadcast(q), "cell").select(
-        "query_id", "vec_id", cosine(F.col("cv"), F.col("qv")).alias("cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.dropDuplicates(["query_id", "vec_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    probes = _probes(queries, query_id, vec_col, "cell", nearest_cells(F.col(vec_col), cents, nprobe))
+    return _probe_topk(_probed(spark.read.parquet(path), probes, "cell"), probes, "cell", k)
 
 
 def lsh_build(
@@ -427,24 +441,11 @@ def lsh_build(
 ) -> None:
     """Persist a hyperplane-LSH index: ``(vec_id, embedding, bucket)``
     partitioned by bucket, plus a ``_meta`` sidecar carrying (dim,
-    n_planes, seed) — the planes are deterministic from the seed, so only
-    three ints need storing."""
-    spark = corpus.sparkSession
+    n_planes, seed)."""
     planes = hyperplanes(dim, n_planes, seed)
-    # same small-files guard as ivf_build: one task per bucket — with the
-    # explicit numPartitions so AQE cannot collapse the write to one task
-    # (see ivf_build)
-    corpus.select(
-        F.col(corpus_id).alias("vec_id"), F.col(vec_col).alias("embedding"),
-        F.coalesce(hyperplane_bucket_v(F.col(vec_col), planes), F.lit(-1).cast("long")).alias("bucket"),
-    ).repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism, "bucket"
-    ).write.mode("overwrite").partitionBy("bucket").parquet(path)
-    from jsschema_spark.localdf import local_df
-
-    local_df(
-        spark, [(dim, n_planes, seed)], "dim int, n_planes int, seed int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
+    rows = _index_rows(corpus, corpus_id, vec_col, _lsh_key(F.col(vec_col), planes), "bucket")
+    _write_index(rows, path, "bucket", "overwrite")
+    _write_lsh_meta(corpus.sparkSession, path, dim, n_planes, seed)
 
 
 def lsh_append(new_vectors: DataFrame, path: str,
@@ -452,19 +453,9 @@ def lsh_append(new_vectors: DataFrame, path: str,
     """Admit a new vector batch into a persisted LSH index: bucket against
     the stored plane parameters (new rows only) and append into the bucket
     partitions — mirror of ``ivf_append``."""
-    spark = new_vectors.sparkSession
-    meta = spark.read.parquet(f"{path}/_meta").collect()[0]
-    planes = hyperplanes(meta["dim"], meta["n_planes"], meta["seed"])
-    (
-        new_vectors.select(
-            F.col(corpus_id).alias("vec_id"), F.col(vec_col).alias("embedding"),
-            F.coalesce(hyperplane_bucket_v(F.col(vec_col), planes), F.lit(-1).cast("long")).alias("bucket"),
-        )
-        .repartition("bucket")  # one file per touched bucket, not per task×bucket
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
+    planes = hyperplanes(*_lsh_meta(new_vectors.sparkSession, path))
+    rows = _index_rows(new_vectors, corpus_id, vec_col, _lsh_key(F.col(vec_col), planes), "bucket")
+    _write_index(rows, path, "bucket", "append")
 
 
 def lsh_search(
@@ -475,27 +466,13 @@ def lsh_search(
     1-bit flips). Only the query batch is projected; probed buckets map to
     index partitions."""
     spark = queries.sparkSession
-    meta = spark.read.parquet(f"{path}/_meta").collect()[0]
-    planes = hyperplanes(meta["dim"], meta["n_planes"], meta["seed"])
-    idx = spark.read.parquet(path).select("vec_id", F.col("embedding").alias("cv"), "bucket")
-    q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.explode(
-            _multi_probe(hyperplane_bucket_v(F.col(vec_col), planes), meta["n_planes"])
-        ).alias("bucket"),
+    dim, n_planes, seed = _lsh_meta(spark, path)
+    planes = hyperplanes(dim, n_planes, seed)
+    probes = _probes(
+        queries, query_id, vec_col, "bucket",
+        _multi_probe(hyperplane_bucket_v(F.col(vec_col), planes), n_planes),
     )
-    # static partition pruning: only the probed bucket directories are read
-    probe = sorted({r["bucket"] for r in q.select("bucket").distinct().collect()})
-    idx = idx.where(F.col("bucket").isin(probe))
-    scored = idx.join(F.broadcast(q), "bucket").select(
-        "query_id", "vec_id", cosine(F.col("cv"), F.col("qv")).alias("cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.dropDuplicates(["query_id", "vec_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _probe_topk(_probed(spark.read.parquet(path), probes, "bucket"), probes, "bucket", k)
 
 
 def mean_pool(

@@ -73,11 +73,13 @@ def read_for_validation(
 
 
 def write_violations(
-    details: DataFrame, path: str, mode: str = "append", by_keyword: bool = True,
+    details: DataFrame, path: str, by_keyword: bool = True,
     files_per_keyword: int = 4,
 ) -> None:
     """Violation detail sink: parquet partitioned by keyword (pruning for
-    consumers), repartitioned by (keyword, salt) before the write.
+    consumers), repartitioned by (keyword, salt) before the write. The
+    write overwrites ``path``, so re-running a validation replaces its
+    violations instead of doubling them.
 
     Plain ``repartition("keyword")`` avoids small-file spray but funnels a
     dominant keyword (violations are usually one failure mode) through ONE
@@ -87,9 +89,9 @@ def write_violations(
     if by_keyword and "keyword" in details.columns:
         salt = (F.rand(7) * files_per_keyword).cast("int")
         out = details.repartition(F.col("keyword"), salt)
-        out.write.mode(mode).partitionBy("keyword").parquet(path)
+        out.write.mode("overwrite").partitionBy("keyword").parquet(path)
     else:
-        out.write.mode(mode).parquet(path)
+        out.write.mode("overwrite").parquet(path)
 
 
 def write_metrics(summary: DataFrame, path: str, mode: str = "overwrite") -> None:

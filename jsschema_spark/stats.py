@@ -29,7 +29,7 @@ from __future__ import annotations
 import math
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -186,19 +186,27 @@ def column_stats(
     return local_df(df.sparkSession, out_rows, schema)
 
 
+def _bin(col: Column, lo: float, hi: float, nbins: int) -> Column:
+    """Fixed-width bucket id (int) of ``col`` over ``nbins`` bins of
+    [lo, hi); values outside clamp into the edge buckets. Raises
+    ``ValueError`` for an empty range or no bins."""
+    if hi <= lo or nbins <= 0:
+        raise ValueError("need hi > lo and nbins > 0")
+    w = (hi - lo) / nbins
+    return F.least(
+        F.greatest(F.floor((col - F.lit(lo)) / F.lit(w)), F.lit(0)),
+        F.lit(nbins - 1),
+    ).cast("int")
+
+
 def histogram(df: DataFrame, col: str, lo: float, hi: float, nbins: int = 32) -> DataFrame:
     """Fixed-width histogram: arithmetic bucketize → hash-agg on bucket id.
 
     Values outside [lo, hi) clamp into the edge buckets so counts always sum
     to the non-null row count. Returns ``bucket, lo, hi, n`` sorted.
     """
-    if hi <= lo or nbins <= 0:
-        raise ValueError("need hi > lo and nbins > 0")
+    bucket = _bin(F.col(col), lo, hi, nbins)
     w = (hi - lo) / nbins
-    bucket = F.least(
-        F.greatest(F.floor((F.col(col) - F.lit(lo)) / F.lit(w)), F.lit(0)),
-        F.lit(nbins - 1),
-    ).cast("int")
     out = (
         df.where(F.col(col).isNotNull())
         .groupBy(bucket.alias("bucket"))
@@ -667,15 +675,9 @@ def psi_by_period(
     (#periods × nbins), so no data row ever meets a window. Every period
     reports all nbins buckets (zero-filled via a period×bucket spine) —
     an empty bin is drift evidence, not an absent row."""
-    if hi <= lo or nbins <= 0:
-        raise ValueError("need hi > lo and nbins > 0")
+    bucket = _bin(F.col(col), lo, hi, nbins)
     from pyspark.sql import Window
 
-    w = (hi - lo) / nbins
-    bucket = F.least(
-        F.greatest(F.floor((F.col(col) - F.lit(lo)) / F.lit(w)), F.lit(0)),
-        F.lit(nbins - 1),
-    ).cast("int")
     cur = (
         df_current.where(F.col(col).isNotNull() & F.col(period_col).isNotNull())
         .groupBy(
@@ -1387,9 +1389,7 @@ def multi_drift(
     def binned(df: DataFrame, side: str) -> DataFrame:
         parts = []
         for c, (lo, hi) in bounds.items():
-            w = (hi - lo) / nbins
-            b = F.floor((F.col(c).cast("double") - F.lit(lo)) / F.lit(w))
-            b = F.least(F.greatest(b, F.lit(0)), F.lit(nbins - 1))
+            b = _bin(F.col(c).cast("double"), lo, hi, nbins)
             parts.append(
                 F.when(F.col(c).isNotNull(), F.struct(F.lit(c).alias("column"), b.alias("bucket")))
             )

@@ -153,8 +153,9 @@ def drift_stream(
     correctness check rejects chained stateful operators), no pivot, no
     join, no per-row Python (the reference ships as literals; it is
     nbins numbers, not data)."""
-    if hi <= lo or nbins <= 0:
-        raise ValueError("need hi > lo and nbins > 0")
+    from jsschema_spark.stats import _bin
+
+    bucket = _bin(F.col(value_col), lo, hi, nbins)
     ref_n = [0] * nbins
     for b, n in reference_hist:
         if not (0 <= int(b) < nbins):
@@ -163,11 +164,6 @@ def drift_stream(
     ref_total = sum(ref_n) or 1
     ref_p = [max(n / ref_total, eps) for n in ref_n]
 
-    w = (hi - lo) / nbins
-    bucket = F.least(
-        F.greatest(F.floor((F.col(value_col) - F.lit(lo)) / F.lit(w)), F.lit(0)),
-        F.lit(nbins - 1),
-    ).cast("int")
     per_win = (
         stream_df.where(F.col(value_col).isNotNull())
         .withColumn("__bucket", bucket)
@@ -387,27 +383,20 @@ def _admit_embedding_batch(
     from pyspark.errors import AnalysisException
 
     from jsschema_spark.functions.dedup import cosine
-    from jsschema_spark.functions.linalg import hyperplane_bucket_v, hyperplanes
-    from jsschema_spark.functions.similarity import _multi_probe
+    from jsschema_spark.functions.linalg import hyperplanes
+    from jsschema_spark.functions.similarity import (
+        _index_rows, _lsh_key, _lsh_meta, _multi_probe, _probed, _write_index, _write_lsh_meta,
+    )
 
     spark = batch_df.sparkSession
     try:
-        meta = spark.read.parquet(f"{index_dir}/_meta").collect()[0]
-        p_dim, p_planes, p_seed = meta["dim"], meta["n_planes"], meta["seed"]
+        p_dim, p_planes, p_seed = _lsh_meta(spark, index_dir)
     except AnalysisException:
         p_dim, p_planes, p_seed = dim, n_planes, seed
-        from jsschema_spark.localdf import local_df
-
-        local_df(
-            spark, [(p_dim, p_planes, p_seed)], "dim int, n_planes int, seed int"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/_meta")
-    planes = hyperplanes(p_dim, p_planes, p_seed)
-
-    bucket = F.coalesce(
-        hyperplane_bucket_v(F.col(vec_col), planes), F.lit(-1).cast("long")
-    )
+        _write_lsh_meta(spark, index_dir, dim, n_planes, seed)
+    key = _lsh_key(F.col(vec_col), hyperplanes(p_dim, p_planes, p_seed))
     bb = batch_df.select(
-        F.col(id_col), F.col(vec_col), bucket.alias("bucket")
+        F.col(id_col), F.col(vec_col), key.alias("bucket")
     ).localCheckpoint(eager=False)
     probed = bb.select(
         F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qv"),
@@ -417,14 +406,9 @@ def _admit_embedding_batch(
     corpus = _prior_batches(spark, index_dir, bid)
     losers = None
     if corpus is not None and corpus.limit(1).count() > 0:
-        corpus = corpus.select("vec_id", F.col("embedding").alias("__cv"), "bucket")
-        # static partition pruning: read only the probed bucket dirs
-        probe = sorted(
-            {r["bucket"] for r in probed.select("bucket").distinct().collect()}
-        )
-        cand = corpus.where(F.col("bucket").isin(probe)).join(probed, "bucket")
+        cand = _probed(corpus, probed, "bucket").join(probed, "bucket")
         losers = (
-            cand.where(cosine(F.col("__cv"), F.col("__qv")) >= threshold)
+            cand.where(cosine(F.col("embedding"), F.col("__qv")) >= threshold)
             .select(F.col("__qid").alias("loser"))
         )
     # within-batch keep-first: the multi-probed side vs the base-bucket
@@ -443,16 +427,9 @@ def _admit_embedding_batch(
 
     kept = batch_df.join(losers, batch_df[id_col] == losers["loser"], "left_anti")
     kept.write.mode("overwrite").parquet(f"{admitted_dir}/batch_id={bid}")
-    (
-        kept.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
-            bucket.alias("bucket"),
-        )
-        .repartition("bucket")  # one file per touched bucket, not task×bucket
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{index_dir}/batch_id={bid}")
+    _write_index(
+        _index_rows(kept, id_col, vec_col, key, "bucket"),
+        f"{index_dir}/batch_id={bid}", "bucket", "overwrite",
     )
 
 

@@ -53,10 +53,7 @@ def main() -> int:
         if args.manifest:
             from jsschema_spark.manifest import Manifest, ResumableValidation
 
-            run = ResumableValidation(
-                tv, args.manifest, output_dir=args.violations and None,
-                id_col=id_col, n_buckets=args.n_buckets,
-            )
+            run = ResumableValidation(tv, args.manifest, id_col=id_col, n_buckets=args.n_buckets)
             run.run(df)
             recs = Manifest(args.manifest).records()
             n_rows = sum(r["n_rows"] for r in recs)
@@ -64,9 +61,11 @@ def main() -> int:
         else:
             from pyspark.sql import functions as F
 
-            applied = tv.apply(df, with_violations=False).cache()
-            n_rows = applied.count()
-            n_valid = applied.where(F.col("valid")).count()
+            counts = tv.apply(df, with_violations=False).agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.count(F.when(F.col("valid"), 1)).alias("n_valid"),
+            ).first()
+            n_rows, n_valid = counts["n_rows"], counts["n_valid"]
 
         if args.violations:
             ids = [id_col] if id_col in df.columns else []

@@ -1090,6 +1090,12 @@ def test_multi_drift_one_scan_battery(spark):
 
     assert len(re.findall(r"Scan ExistingRDD", plan)) <= 4
 
+    # swapped bounds used to return a silent wrong PSI, equal bounds a
+    # DIVIDE_BY_ZERO at collect time; both are bad input, as in histogram
+    for bad in [(10.0, 0.0), (5.0, 5.0)]:
+        with pytest.raises(ValueError, match="need hi > lo"):
+            multi_drift(base, cur, {"a": bad, "b": (0.0, 4.0)}, nbins=10)
+
 
 def test_qq_drift_localizes_tail_fattening(spark):
     from jsschema_spark.stats import qq_drift

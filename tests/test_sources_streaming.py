@@ -48,6 +48,9 @@ def test_validate_table_end_to_end(spark, tmp_path):
     assert "keyword" in viol.columns and "clip_id" in viol.columns
     # keyword partitioning happened
     assert any(p.startswith("keyword=") for p in os.listdir(vdir))
+    # a re-run replaces the violations instead of appending a second copy
+    validate_table(spark, src, SCHEMA, violations_path=vdir, metrics_path=mdir)
+    assert spark.read.parquet(vdir).count() == sum(rows.values())
     metrics_files = [f for f in os.listdir(mdir) if f.endswith(".json")]
     assert metrics_files
     recs = [

@@ -538,13 +538,20 @@ def test_ivf_build_search_matches_inline_and_prunes(spark, emb, tmp_path):
 
 
 def test_lsh_build_search_self_match_and_prunes(spark, emb, tmp_path):
+    """lsh_search over a persisted index returns the same rows as inline
+    lsh_topk with the same planes, and reads only the probed buckets."""
     path = str(tmp_path / "lsh")
-    S.lsh_build(emb, path, dim=64, n_planes=8)
+    S.lsh_build(emb, path, dim=64, n_planes=8, seed=42)
     queries = emb.limit(3).select(F.col("vec_id").alias("query_id"), "embedding")
     out = S.lsh_search(queries, path, k=3)
     rows = out.collect()
     top1 = {r.query_id: r.vec_id for r in rows if r.rank == 1}
     assert top1 == {q: q for q in top1}
+
+    inline = S.lsh_topk(emb, queries, k=3, dim=64, n_planes=8, seed=42)
+    assert sorted((r.query_id, r.vec_id, r.rank) for r in rows) == sorted(
+        (r.query_id, r.vec_id, r.rank) for r in inline.collect()
+    )
     plan = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
     assert plan.count("ArrowEvalPython") == 1, plan
     scan_lines = [l for l in plan.splitlines() if "FileScan" in l and path.split("/")[-1] in l]
@@ -1360,24 +1367,45 @@ def test_chunk_then_pack_composes(spark):
 
 
 def test_index_write_file_count_bounded(spark, emb, tmp_path):
-    """The partitioned index write must land each cell in ONE task: data
-    file count stays ~#cells, not #tasks x #cells (the dynamic-partition
-    small-files trap)."""
+    """Every partitioned index write (IVF and LSH, build and append) must
+    land each key in ONE task: one write adds one data file per key it
+    touches, not #tasks x #keys (the dynamic-partition small-files trap)."""
     import glob
     import os
 
-    from jsschema_spark.functions.similarity import ivf_build
+    from jsschema_spark.functions.similarity import (
+        ivf_append,
+        ivf_build,
+        lsh_append,
+        lsh_build,
+    )
+
+    def data_files(path, key):
+        return set(glob.glob(os.path.join(path, f"{key}=*", "*.parquet")))
+
+    def keys_of(files):
+        dirs = [os.path.dirname(f) for f in files]
+        assert len(dirs) == len(set(dirs)), sorted(files)  # one file per key
+        return {os.path.basename(d) for d in dirs}
 
     corpus = emb.repartition(8)  # many write tasks to provoke the trap
-    path = str(tmp_path / "fc_idx")
-    ivf_build(corpus, path, n_centroids=8, seed=42, train=False)
-    data_files = [
-        f for f in glob.glob(os.path.join(path, "cell=*", "*.parquet"))
-    ]
-    cells = {os.path.basename(os.path.dirname(f)) for f in data_files}
-    # exactly one data file per non-empty cell
-    assert len(data_files) == len(cells)
-    assert len(cells) <= 9  # 8 cells + the -1 null cell
+    new_vectors = (
+        emb.where(F.col("vec_id") % 2 == 0)
+        .withColumn("vec_id", F.col("vec_id") + 10_000_000)
+        .repartition(8)
+    )
+    for build, append, key, params in [
+        (ivf_build, ivf_append, "cell", dict(n_centroids=8, seed=42, train=False)),
+        (lsh_build, lsh_append, "bucket", dict(dim=64, n_planes=4, seed=42)),
+    ]:
+        path = str(tmp_path / f"fc_{key}")
+        build(corpus, path, **params)
+        built = data_files(path, key)
+        assert keys_of(built)
+        if key == "cell":
+            assert len(keys_of(built)) <= 9  # 8 cells + the -1 null cell
+        append(new_vectors, path)
+        assert keys_of(data_files(path, key) - built)
 
 # ------------------------------------------------- round-5 regression guards
 
