@@ -8,11 +8,14 @@ import os
 
 import pytest
 
-from jsschema_spark import read_file
+from jsschema_spark import read_file, read_string
 from jsschema_spark.pyvalidate import Validator
 from jsschema_spark.resolver import RefResolver
 
 CORPUS = "/root/reference/test"
+NEEDS_CORPUS = pytest.mark.skipif(
+    not os.path.isdir(CORPUS), reason=f"reference corpus {CORPUS} is absent"
+)
 
 # the reference's suite list (schema_test.go:36-58)
 SUITES = [
@@ -34,6 +37,7 @@ def corpus_cases():
     return cases
 
 
+@NEEDS_CORPUS
 def test_corpus_is_complete():
     cases = corpus_cases()
     n_pass = sum(1 for _, _, ok in cases if ok)
@@ -57,6 +61,7 @@ def test_golden_corpus(suite, path, expect_pass):
         assert violations, f"{path} should fail but validated clean"
 
 
+@NEEDS_CORPUS
 def test_business_ref_resolution():
     """#/definitions/address inside allOf (business.json)."""
     schema = read_file(os.path.join(CORPUS, "business.json"))
@@ -68,7 +73,7 @@ def test_business_ref_resolution():
 
 
 def test_negative_cache():
-    schema = read_file(os.path.join(CORPUS, "business.json"))
+    schema = read_string('{"definitions": {"address": {"type": "object"}}}')
     res = RefResolver.with_default_providers(schema)
     import pytest as _pt
     from jsschema_spark.errors import ResolutionError

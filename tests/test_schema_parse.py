@@ -12,6 +12,9 @@ from jsschema_spark import FORBIDDEN, SchemaParseError, parse_schema, read_file,
 from jsschema_spark.schema import draft04_metaschema
 
 CORPUS = "/root/reference/test"
+NEEDS_CORPUS = pytest.mark.skipif(
+    not os.path.isdir(CORPUS), reason=f"reference corpus {CORPUS} is absent"
+)
 
 
 def corpus_schemas():
@@ -22,7 +25,9 @@ def corpus_schemas():
     )
 
 
-@pytest.mark.parametrize("path", corpus_schemas(), ids=os.path.basename)
+@pytest.mark.parametrize(
+    "path", corpus_schemas(), ids=[os.path.basename(p) for p in corpus_schemas()]
+)
 def test_parse_all_corpus_schemas(path):
     node = read_file(path)
     # serialized form re-parses to an equivalent tree
@@ -30,6 +35,7 @@ def test_parse_all_corpus_schemas(path):
     assert again.to_dict() == node.to_dict()
 
 
+@NEEDS_CORPUS
 def test_parse_qiita_real_world():
     """40KB real-world hyper-schema: parse robustness + extras preservation."""
     node = read_file(os.path.join(CORPUS, "qiita.json"))

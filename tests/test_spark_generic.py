@@ -6,11 +6,15 @@ import glob
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from jsschema_spark.generic import validate_json_column, validate_json_pairs, json_predicate_column
 
 CORPUS = "/root/reference/test"
+NEEDS_CORPUS = pytest.mark.skipif(
+    not os.path.isdir(CORPUS), reason=f"reference corpus {CORPUS} is absent"
+)
 
 SUITES = [
     "allof", "anyof", "array", "arraylength", "arraytuple",
@@ -34,6 +38,7 @@ def corpus_rows():
     return rows
 
 
+@NEEDS_CORPUS
 def test_corpus_on_spark(spark):
     rows = corpus_rows()
     assert len(rows) == 75
