@@ -16,6 +16,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 CORPUS = "/root/reference/test"
@@ -44,24 +45,23 @@ _SPREAD_CAP_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_CAP_MB", "64")) << 20
 
 
 def _t(
-    spark: SparkSession, sf_dir: str, name: str, spread: "bool | None" = None
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
-    """Read a driver table; optionally spread a single-file scan.
+    """Read a driver table, spreading a small single-file scan of the
+    documents table, or of any table with ``spread=True``.
 
-    ``spread=None`` (default) auto-spreads only the documents table: its
-    queries do heavy per-row text work (measured wins up to 30s/query at
-    sf1.0) while the repartition of 5.9MB costs ~0.1s. The other tables'
-    query mix is dominated by plain map-side-combined aggregates, where
-    the extra exchange is a pure ~0.3-0.8s tax per query (measured:
+    The documents table is spread because its queries do heavy per-row
+    text work (measured wins up to 30s/query at sf1.0) while the
+    repartition of 5.9MB costs ~0.1s. The other tables' query mix is
+    dominated by plain map-side-combined aggregates, where the extra
+    exchange is a pure ~0.3-0.8s tax per query (measured:
     uniqueness_events_user 0.84s unspread vs 1.49s spread) — those stay
     on the natural scan and heavy exceptions opt in with
     ``spread=True`` (e.g. json_key_profile_events: 4.0s -> 1.3s)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
-    if spread is None:
-        spread = name == "documents"
     if (
-        spread
+        (spread or name == "documents")
         and os.path.isfile(path)
         and os.path.getsize(path) <= _SPREAD_CAP_BYTES
         and spark.sparkContext.defaultParallelism > 2
@@ -91,22 +91,51 @@ def _docs_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _clip_params(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id params feed for the in-Spark clip-synth queries. The
-    documents table at small SF is ONE parquet file → one scan partition,
-    and a params table inherits that — so the CPU-bound per-clip Arrow
-    stage downstream (synth/encode/decode) would run on ONE core while 31
-    idle (measured: flac_invariant_clips 27s/run serial vs 4.3s on a
-    32-way input). The params table is row-scale tiny, so spreading it to
-    defaultParallelism costs one negligible shuffle and restores the
-    parallelism a many-file 100-TB table gets for free."""
-    return (
-        # spread=False: this helper repartitions AFTER the 8-byte projection
-        # (narrower shuffle than _t's whole-row spread would be)
-        _t(spark, sf_dir, "documents", spread=False)
-        .select("doc_id")
+_CLIP_ID = "clip-%012d"
+
+
+def _synth_clips(
+    spark: SparkSession, sf_dir: str, params: list, synth, rows_fn, schema
+) -> DataFrame:
+    """The clip-synth scan behind the in-Spark ``*_clips`` audio queries:
+    ``doc_id`` from the documents table, projected with ``clip_id``
+    (``_CLIP_ID``) and the query's ``params`` (Columns over ``doc_id``),
+    then ONE Arrow-batched pandas stage that calls
+    ``synth(doc_id, *params)`` per row and yields ``rows_fn(pdf, outs)``
+    per batch — ``pdf`` the batch's ``(clip_id, doc_id, *params)`` frame,
+    ``outs`` its synth results — as a frame matching ``schema``.
+
+    The 8-byte doc_id projection is repartitioned to defaultParallelism
+    before the Python stage: the documents table at small SF is ONE
+    parquet file → one scan partition, so the CPU-bound per-clip stage
+    (synth/encode/decode) would run on ONE core while 31 idle (measured:
+    flac_invariant_clips 27s/run serial vs 4.3s on a 32-way input).
+    Spreading the bare doc_id costs one negligible shuffle (narrower than
+    ``_t``'s whole-row spread) and restores the parallelism a many-file
+    100-TB table gets for free."""
+    i = F.col("doc_id")
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .select(i)
         .repartition(spark.sparkContext.defaultParallelism)
+        .select(F.format_string(_CLIP_ID, i).alias("clip_id"), i, *params)
     )
+
+    def gen(batches):
+        for pdf in batches:
+            args = zip(*(pdf[c] for c in pdf.columns[1:]))
+            yield rows_fn(pdf, [synth(*a) for a in args])
+
+    return docs.mapInPandas(gen, schema)
+
+
+def _tuples(pdf, outs):
+    """``rows_fn`` for a synth that returns the output row itself (a tuple
+    in ``schema`` order, or one value): the frame's columns are unnamed,
+    so Spark assigns them to ``schema`` by position."""
+    import pandas as pd
+
+    return pd.DataFrame(outs)
 
 
 # --------------------------------------------------------------------------
@@ -2044,9 +2073,15 @@ def q_audio_bandwidth_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a 44.1 kHz container is band-limited with ratio ≤ 0.12 vs the 0.25
     threshold; a 2.4-6 kHz tone at 16 kHz is full-band at ≥ 0.3), so a
     hash match certifies the entire encode→decode→FFT→classify path."""
-    from jsschema_spark.audio import _spectral_rows, bandwidth_check, wav_encode
+    import numpy as np
 
-    docs = _clip_params(spark, sf_dir)
+    from jsschema_spark.audio import (
+        SPECTRAL_ROW_SCHEMA,
+        _spectral_rows,
+        bandwidth_check,
+        wav_encode,
+    )
+
     i = F.col("doc_id")
     kind = (i % 10).cast("int")
     sr = (
@@ -2058,43 +2093,31 @@ def q_audio_bandwidth_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = F.when(kind <= 5, F.lit(800) + (i % 7) * 300).otherwise(
         F.lit(2400) + (i % 5) * 900
     )
-    params = docs.select(
-        F.format_string("clip-%012d", i).alias("clip_id"),
-        kind.alias("kind"),
-        sr.cast("int").alias("sr_hz"),
-        freq.cast("int").alias("freq_hz"),
-        (F.lit(300) + (i % 5) * 100).cast("int").alias("dur_ms"),
-    )
 
-    def gen(batches):
-        import numpy as np
+    def synth(doc_id, k, s, f_hz, d):
+        if k == 1:
+            return b"corrupt payload"
+        n = s * d // 1000
+        if k == 0:
+            return wav_encode(np.zeros(n, dtype=np.int16), s)
+        t = np.arange(n, dtype=np.float64) / float(s)
+        return wav_encode(
+            (8000.0 * np.sin(2.0 * np.pi * float(f_hz) * t)).astype(np.int16), s
+        )
 
-        for pdf in batches:
-            payloads = []
-            for k, s, f_hz, d in zip(
-                pdf["kind"], pdf["sr_hz"], pdf["freq_hz"], pdf["dur_ms"]
-            ):
-                if k == 1:
-                    payloads.append(b"corrupt payload")
-                    continue
-                n = int(s) * int(d) // 1000
-                if k == 0:
-                    pcm = np.zeros(n, dtype=np.int16)
-                else:
-                    t = np.arange(n, dtype=np.float64) / float(s)
-                    pcm = (8000.0 * np.sin(2.0 * np.pi * float(f_hz) * t)).astype(
-                        np.int16
-                    )
-                payloads.append(wav_encode(pcm, int(s)))
-            feat = _spectral_rows(list(pdf["clip_id"]), payloads)
-            feat["sr_hz"] = pdf["sr_hz"].to_numpy()
-            yield feat
-
-    feats = params.mapInPandas(
-        gen,
-        "clip_id string, decode_ok boolean, zcr_hz double, centroid_hz double, "
-        "rolloff85_hz double, active_ratio double, leading_silence_ms double, "
-        "trailing_silence_ms double, sr_hz int",
+    feats = _synth_clips(
+        spark, sf_dir,
+        [
+            kind.alias("kind"),
+            sr.cast("int").alias("sr_hz"),
+            freq.cast("int").alias("freq_hz"),
+            (F.lit(300) + (i % 5) * 100).cast("int").alias("dur_ms"),
+        ],
+        synth,
+        lambda pdf, outs: _spectral_rows(pdf["clip_id"], outs).assign(sr_hz=pdf["sr_hz"].to_numpy()),
+        T.StructType(
+            [*SPECTRAL_ROW_SCHEMA.fields, T.StructField("sr_hz", T.IntegerType())]
+        ),
     )
     out = bandwidth_check(feats)
     return out.groupBy("sr_hz", "band_status").agg(
@@ -2163,44 +2186,34 @@ def q_audio_profile_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     production PCM kernel) then classified by audio.profile_check. The
     oracle is pure doc_id arithmetic: a hash match certifies the
     encode→decode→profile→classify path."""
-    from jsschema_spark.audio import _profile_rows, profile_check, wav_encode
+    import numpy as np
 
-    docs = _clip_params(spark, sf_dir)
+    from jsschema_spark.audio import PROFILE_ROW_SCHEMA, _profile_rows, profile_check, wav_encode
+
+    sr = 16000
+
+    def synth(doc_id, k, f_hz, d):
+        if k == 1:
+            return b"corrupt payload"
+        n = sr * d // 1000
+        if k == 0:
+            return wav_encode(np.zeros(n, dtype=np.int16), sr)
+        amp = 40000.0 if k in (2, 3) else 8000.0
+        off = 2000.0 if k in (4, 5) else 0.0
+        t = np.arange(n, dtype=np.float64) / sr
+        wave = amp * np.sin(2.0 * np.pi * float(f_hz) * t) + off
+        return wav_encode(np.clip(wave, -32768, 32767).astype(np.int16), sr)
+
     i = F.col("doc_id")
-    params = docs.select(
-        F.format_string("clip-%012d", i).alias("clip_id"),
-        (i % 8).cast("int").alias("kind"),
-        (F.lit(500) + (i % 5) * 400).cast("int").alias("freq_hz"),
-        (F.lit(300) + (i % 4) * 100).cast("int").alias("dur_ms"),
-    )
-
-    def gen(batches):
-        import numpy as np
-
-        sr = 16000
-        for pdf in batches:
-            payloads = []
-            for k, f_hz, d in zip(pdf["kind"], pdf["freq_hz"], pdf["dur_ms"]):
-                if k == 1:
-                    payloads.append(b"corrupt payload")
-                    continue
-                n = sr * int(d) // 1000
-                if k == 0:
-                    pcm = np.zeros(n, dtype=np.int16)
-                else:
-                    amp = 40000.0 if k in (2, 3) else 8000.0
-                    off = 2000.0 if k in (4, 5) else 0.0
-                    t = np.arange(n, dtype=np.float64) / sr
-                    wave = amp * np.sin(2.0 * np.pi * float(f_hz) * t) + off
-                    pcm = np.clip(wave, -32768, 32767).astype(np.int16)
-                payloads.append(wav_encode(pcm, sr))
-            feat = _profile_rows(list(pdf["clip_id"]), payloads)
-            yield feat
-
-    feats = params.mapInPandas(
-        gen,
-        "clip_id string, decode_ok boolean, sr_hz int, n_samples int, "
-        "rms_dbfs double, peak int, clip_frac double, dc_offset double",
+    feats = _synth_clips(
+        spark, sf_dir,
+        [
+            (i % 8).cast("int").alias("kind"),
+            (F.lit(500) + (i % 5) * 400).cast("int").alias("freq_hz"),
+            (F.lit(300) + (i % 4) * 100).cast("int").alias("dur_ms"),
+        ],
+        synth, lambda pdf, outs: _profile_rows(pdf["clip_id"], outs),
+        PROFILE_ROW_SCHEMA,
     )
     out = profile_check(feats)
     return out.groupBy("profile_status").agg(
@@ -2250,13 +2263,29 @@ def q_transcript_vad_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans are frame-aligned (300 ms pads, 20 ms frames) so VAD-active
     time is arithmetically exact and the oracle is doc_id formulas
     only."""
+    import numpy as np
+
     from jsschema_spark.audio import (
+        VAD_ROW_SCHEMA,
         _vad_rows,
         transcript_vad_consistency,
         wav_encode,
     )
 
-    docs = _clip_params(spark, sf_dir)
+    sr = 16000
+    sil = np.zeros(sr * 300 // 1000, dtype=np.int16)
+
+    def tone(ms, f_hz=440.0):
+        t = np.arange(sr * ms // 1000, dtype=np.float64) / sr
+        return (8000.0 * np.sin(2.0 * np.pi * f_hz * t)).astype(np.int16)
+
+    def synth(doc_id, k, n_tokens):
+        if k == 4:
+            return b"corrupt payload"
+        if k == 0:
+            return wav_encode(np.zeros(sr * 16 // 10, dtype=np.int16), sr)
+        return wav_encode(np.concatenate([sil, tone(4000 if k == 5 else 1000), sil]), sr)
+
     i = F.col("doc_id")
     kind = (i % 6).cast("int")
     n_tok = (
@@ -2265,38 +2294,14 @@ def q_transcript_vad_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(kind == 5, F.lit(1))
         .otherwise(F.lit(3))
     )
-    params = docs.select(
-        F.format_string("clip-%012d", i).alias("clip_id"),
-        kind.alias("kind"),
-        n_tok.cast("int").alias("n_tokens"),
-    )
-
-    def gen(batches):
-        import numpy as np
-
-        sr = 16000
-        sil = np.zeros(sr * 300 // 1000, dtype=np.int16)
-
-        def tone(ms, f_hz=440.0):
-            t = np.arange(sr * ms // 1000, dtype=np.float64) / sr
-            return (8000.0 * np.sin(2.0 * np.pi * f_hz * t)).astype(np.int16)
-
-        for pdf in batches:
-            payloads = []
-            for k in pdf["kind"]:
-                if k == 4:
-                    payloads.append(b"corrupt payload")
-                elif k == 0:
-                    payloads.append(wav_encode(np.zeros(sr * 16 // 10, dtype=np.int16), sr))
-                elif k == 5:
-                    payloads.append(wav_encode(np.concatenate([sil, tone(4000), sil]), sr))
-                else:
-                    payloads.append(wav_encode(np.concatenate([sil, tone(1000), sil]), sr))
-            yield _vad_rows(list(pdf["clip_id"]), payloads)
-
-    segs = params.select("clip_id", "kind").mapInPandas(
-        gen,
-        "clip_id string, seg_idx int, start_ms double, end_ms double, decode_ok boolean",
+    segs = _synth_clips(
+        spark, sf_dir,
+        [kind.alias("kind"), n_tok.cast("int").alias("n_tokens")],
+        synth,
+        lambda pdf, outs: _vad_rows(pdf["clip_id"], outs).merge(pdf[["clip_id", "n_tokens"]]),
+        T.StructType(
+            [*VAD_ROW_SCHEMA.fields, T.StructField("n_tokens", T.IntegerType())]
+        ),
     )
     per_clip = segs.groupBy("clip_id").agg(
         F.coalesce(
@@ -2306,9 +2311,9 @@ def q_transcript_vad_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0),
         ).alias("active_ms"),
         F.first("decode_ok").alias("decode_ok"),
+        F.first("n_tokens").alias("n_tokens"),
     )
-    joined = per_clip.join(params, "clip_id")
-    out = transcript_vad_consistency(joined)
+    out = transcript_vad_consistency(per_clip)
     return out.groupBy("vad_status").agg(
         F.count(F.lit(1)).cast("long").alias("n_clips")
     )
@@ -2413,43 +2418,26 @@ def q_duration_check_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     (duration_mismatch), both invisible to the decode-free size screen
     when the byte count happens to satisfy it. Oracle = doc_id
     formulas."""
-    from jsschema_spark.audio import _profile_rows, duration_check, wav_encode
+    import numpy as np
 
-    docs = _clip_params(spark, sf_dir)
-    i = F.col("doc_id")
-    params = docs.select(
-        F.format_string("clip-%012d", i).alias("clip_id"),
-        (i % 5).cast("int").alias("kind"),
+    from jsschema_spark.audio import PROFILE_ROW_SCHEMA, _profile_rows, duration_check, wav_encode
+
+    def synth(doc_id, k):
+        if k == 3:
+            return b"corrupt payload"
+        sr = 8000 if k == 1 else 16000
+        ms = 1400 if k == 2 else 1000
+        t = np.arange(sr * ms // 1000, dtype=np.float64) / sr
+        return wav_encode((8000.0 * np.sin(2.0 * np.pi * 440.0 * t)).astype(np.int16), sr)
+
+    feats = _synth_clips(
+        spark, sf_dir, [(F.col("doc_id") % 5).cast("int").alias("kind")],
+        synth, lambda pdf, outs: _profile_rows(pdf["clip_id"], outs),
+        PROFILE_ROW_SCHEMA,
     )
-
-    def gen(batches):
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for k in pdf["kind"]:
-                if k == 3:
-                    payloads.append(b"corrupt payload")
-                    continue
-                sr = 8000 if k == 1 else 16000
-                ms = 1400 if k == 2 else 1000
-                n = sr * ms // 1000
-                t = np.arange(n, dtype=np.float64) / sr
-                pcm = (8000.0 * np.sin(2.0 * np.pi * 440.0 * t)).astype(np.int16)
-                payloads.append(wav_encode(pcm, sr))
-            yield _profile_rows(list(pdf["clip_id"]), payloads)
-
-    feats = params.mapInPandas(
-        gen,
-        "clip_id string, decode_ok boolean, sr_hz int, n_samples int, "
-        "rms_dbfs double, peak int, clip_frac double, dc_offset double",
+    out = duration_check(
+        feats.withColumns({"sr_hz_meta": F.lit(16000), "dur_ms_meta": F.lit(1000)})
     )
-    meta = params.select(
-        "clip_id",
-        F.lit(16000).alias("sr_hz_meta"),
-        F.lit(1000).alias("dur_ms_meta"),
-    )
-    out = duration_check(feats.join(meta, "clip_id"))
     return out.groupBy("dur_status").agg(
         F.count(F.lit(1)).cast("long").alias("n_clips")
     )
@@ -2538,46 +2526,40 @@ def q_ab_test_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _audio_normalize(spark: SparkSession, sf_dir: str, resample) -> DataFrame:
     """Mixed-rate (8/16/44.1 kHz), mixed-gain (quiet/hot/reference) synth
-    WAVs resampled to 16 kHz by ``resample``, gain-normalized to −20
-    dBFS, then re-DECODED and re-profiled in the same Arrow stage; a clip
-    counts 'normalized' only if its re-encoded WAV decodes at 16 kHz with
-    RMS within 1 dB of target. Counts per (orig_sr, status)."""
-    from jsschema_spark.audio import normalize_gain, pcm_profile, wav_decode, wav_encode
+    WAVs run through the library's normalize loop (audio._normalize_rows:
+    resample to 16 kHz by ``resample``, gain-normalize to −20 dBFS,
+    re-encode), then re-DECODED and re-profiled by audio._profile_rows in
+    the same Arrow stage; a clip counts 'normalized' only if its output
+    WAV decodes at 16 kHz with RMS within 1 dB of target. Counts per
+    (orig_sr, status)."""
+    import numpy as np
+    import pandas as pd
 
-    docs = _clip_params(spark, sf_dir)
-    i = F.col("doc_id")
-    params = docs.select(
-        F.format_string("clip-%012d", i).alias("clip_id"),
-        (i % 4).cast("int").alias("kind"),
+    from jsschema_spark.audio import _normalize_rows, _profile_rows, wav_encode
+
+    cfg = {0: (8000, 500.0), 1: (44100, 28000.0), 2: (16000, 8000.0)}
+
+    def synth(doc_id, k):
+        if k == 3:
+            return b"corrupt payload"
+        sr, amp = cfg[k]
+        t = np.arange(sr // 2, dtype=np.float64) / sr
+        return wav_encode((amp * np.sin(2.0 * np.pi * 440.0 * t)).astype(np.int16), sr)
+
+    def rows(pdf, outs):
+        norm = _normalize_rows(pdf["clip_id"], outs, resample, 16000, -20.0)
+        prof = _profile_rows(norm["clip_id"], norm["bytes"])
+        ok = (prof["sr_hz"] == 16000) & ((prof["rms_dbfs"] + 20.0).abs() < 1.0)
+        status = np.where(ok, "normalized", "off_target")
+        return pd.DataFrame({
+            "orig_sr": [cfg[k][0] if k in cfg else 0 for k in pdf["kind"]],
+            "status": np.where(norm["decode_ok"], status, "undecodable"),
+        })
+
+    feats = _synth_clips(
+        spark, sf_dir, [(F.col("doc_id") % 4).cast("int").alias("kind")],
+        synth, rows, "orig_sr int, status string",
     )
-
-    def gen(batches):
-        import numpy as np
-
-        cfg = {0: (8000, 500.0), 1: (44100, 28000.0), 2: (16000, 8000.0)}
-        for pdf in batches:
-            out = {"orig_sr": [], "status": []}
-            for k in pdf["kind"]:
-                if k == 3:
-                    out["orig_sr"].append(0)
-                    out["status"].append("undecodable")
-                    continue
-                sr, amp = cfg[int(k)]
-                t = np.arange(sr // 2, dtype=np.float64) / sr
-                pcm = (amp * np.sin(2.0 * np.pi * 440.0 * t)).astype(np.int16)
-                wav = wav_encode(pcm, sr)
-                sr_d, pcm_d = wav_decode(wav)
-                pcm_n = normalize_gain(resample(pcm_d, sr_d, 16000), -20.0)
-                sr_v, pcm_v = wav_decode(wav_encode(pcm_n, 16000))
-                rms_dbfs, _, _, _ = pcm_profile(pcm_v)
-                ok = sr_v == 16000 and abs(rms_dbfs - (-20.0)) < 1.0
-                out["orig_sr"].append(sr)
-                out["status"].append("normalized" if ok else "off_target")
-            import pandas as _pd
-
-            yield _pd.DataFrame(out)
-
-    feats = params.mapInPandas(gen, "orig_sr int, status string")
     return feats.groupBy("orig_sr", "status").agg(
         F.count(F.lit(1)).cast("long").alias("n_clips")
     )
@@ -2734,46 +2716,27 @@ def q_audio_alignment_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     score ≈ 1 (or reject the unrelated pair). Oracle = doc_id formulas;
     a hash match certifies lag AND score behavior of the alignment
     kernel."""
+    import numpy as np
+
     from jsschema_spark.audio import xcorr_offset
 
-    docs = _clip_params(spark, sf_dir)
-    params = docs.select(
-        "doc_id", (F.col("doc_id") % 4).cast("int").alias("kind")
+    sr = 16000
+
+    def synth(doc_id, k):
+        rng = np.random.default_rng(doc_id + 1)
+        b = rng.normal(0, 3000, 4000).astype(np.int16)
+        if k == 3:
+            a = rng.normal(0, 3000, 4800).astype(np.int16)
+            _, score = xcorr_offset(a, b)
+            return "no_alignment" if score < 0.5 else "false_match"
+        shift = {0: 800, 1: 1600, 2: 0}[k]
+        lag, score = xcorr_offset(np.concatenate([np.zeros(shift, dtype=np.int16), b]), b)
+        return f"aligned_{shift * 1000 // sr}ms" if lag == shift and score > 0.9 else "missed"
+
+    feats = _synth_clips(
+        spark, sf_dir, [(F.col("doc_id") % 4).cast("int").alias("kind")],
+        synth, _tuples, "status string",
     )
-
-    def gen(batches):
-        import numpy as np
-
-        sr = 16000
-        for pdf in batches:
-            statuses = []
-            for doc_id, k in zip(pdf["doc_id"], pdf["kind"]):
-                rng = np.random.default_rng(int(doc_id) + 1)
-                b = rng.normal(0, 3000, 4000).astype(np.int16)
-                if k == 3:
-                    a = rng.normal(0, 3000, 4800).astype(np.int16)
-                    expected = None
-                else:
-                    shift = {0: 800, 1: 1600, 2: 0}[int(k)]
-                    a = np.concatenate(
-                        [np.zeros(shift, dtype=np.int16), b]
-                    )
-                    expected = shift
-                lag, score = xcorr_offset(a, b)
-                if expected is None:
-                    statuses.append(
-                        "no_alignment" if score < 0.5 else "false_match"
-                    )
-                else:
-                    ok = lag == expected and score > 0.9
-                    statuses.append(
-                        f"aligned_{expected * 1000 // sr}ms" if ok else "missed"
-                    )
-            import pandas as _pd
-
-            yield _pd.DataFrame({"status": statuses})
-
-    feats = params.mapInPandas(gen, "status string")
     return feats.groupBy("status").agg(
         F.count(F.lit(1)).cast("long").alias("n_clips")
     )
@@ -2927,44 +2890,31 @@ def q_pitch_profile_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic noise is unvoiced — the speech-corpus QA signal (TTS
     farms have unnaturally tight F0; music contaminates the voice band).
     Formula-only oracle certifies the autocorrelation pitch kernel."""
+    import numpy as np
+
     from jsschema_spark.audio import estimate_f0
 
-    docs = _clip_params(spark, sf_dir)
-    params = docs.select(
-        "doc_id", (F.col("doc_id") % 4).cast("int").alias("kind")
+    sr = 16000
+    t = np.arange(sr // 2, dtype=np.float64) / sr
+    tones = {
+        k: (8000.0 * np.sin(2.0 * np.pi * f * t)).astype(np.int16)
+        for k, f in ((0, 110.0), (1, 220.0), (2, 330.0))
+    }
+
+    def synth(doc_id, k):
+        if k == 3:
+            pcm = np.random.default_rng(doc_id).normal(0, 3000, sr // 2).astype(np.int16)
+        else:
+            pcm = tones[k]
+        f0, p = estimate_f0(pcm, sr)
+        if p < 0.5:
+            return "unvoiced"
+        return "low" if f0 < 165.0 else "mid" if f0 < 275.0 else "high"
+
+    feats = _synth_clips(
+        spark, sf_dir, [(F.col("doc_id") % 4).cast("int").alias("kind")],
+        synth, _tuples, "f0_band string",
     )
-
-    def gen(batches):
-        import numpy as np
-
-        sr = 16000
-        t = np.arange(sr // 2, dtype=np.float64) / sr
-        tones = {
-            k: (8000.0 * np.sin(2.0 * np.pi * f * t)).astype(np.int16)
-            for k, f in ((0, 110.0), (1, 220.0), (2, 330.0))
-        }
-        for pdf in batches:
-            bands = []
-            for doc_id, k in zip(pdf["doc_id"], pdf["kind"]):
-                if k == 3:
-                    rng = np.random.default_rng(int(doc_id))
-                    pcm = rng.normal(0, 3000, sr // 2).astype(np.int16)
-                else:
-                    pcm = tones[int(k)]
-                f0, p = estimate_f0(pcm, sr)
-                if p < 0.5:
-                    bands.append("unvoiced")
-                elif f0 < 165.0:
-                    bands.append("low")
-                elif f0 < 275.0:
-                    bands.append("mid")
-                else:
-                    bands.append("high")
-            import pandas as _pd
-
-            yield _pd.DataFrame({"f0_band": bands})
-
-    feats = params.mapInPandas(gen, "f0_band string")
     return feats.groupBy("f0_band").agg(
         F.count(F.lit(1)).cast("long").alias("n_clips")
     )
@@ -2993,57 +2943,45 @@ def q_flac_invariant_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit (sum_samples). Scale shape: two Arrow-batched Python
     stages and one tiny groupBy — per-clip work is constant, no shuffle of
     payload bytes (only the 5-column result rows)."""
-    from jsschema_spark.audio import codec_invariant_udf
+    import numpy as np
 
-    docs = _clip_params(spark, sf_dir)
+    from jsschema_spark.audio import _seed64, codec_invariant_udf, synth_pcm, wav_encode
+    from jsschema_spark.flac import flac_encode
+
+    sr = 16000
+
+    def synth(doc_id, k, d):
+        cid = _CLIP_ID % doc_id
+        n = sr * d // 1000
+        pcm = synth_pcm(cid, sr, n).copy()
+        if k == 2:
+            rng = np.random.default_rng(_seed64(cid, "noise"))
+            pcm = np.clip(
+                pcm.astype(np.int32) + rng.integers(-16000, 16000, size=n),
+                -32768, 32767,
+            ).astype(np.int16)
+        if k == 3:
+            return cid, "pcm_s16le", wav_encode(pcm, sr)
+        if k == 4:
+            return cid, "opus", b"OggS" + bytes(16)
+        payload = flac_encode(pcm, sr)
+        if k == 1:
+            b = bytearray(payload)
+            b[len(b) // 2] ^= 0x40
+            payload = bytes(b)
+        elif k == 5:
+            payload = payload[: len(payload) // 2]
+        return cid, "flac", payload
+
     i = F.col("doc_id")
-    params = docs.select(
-        F.format_string("clip-%012d", i).alias("clip_id"),
-        (i % 6).cast("int").alias("kind"),
-        (F.lit(250) + (i % 4) * 125).cast("int").alias("dur_ms"),
+    clips = _synth_clips(
+        spark, sf_dir,
+        [
+            (i % 6).cast("int").alias("kind"),
+            (F.lit(250) + (i % 4) * 125).cast("int").alias("dur_ms"),
+        ],
+        synth, _tuples, "clip_id string, codec string, bytes binary",
     )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as _pd
-
-        from jsschema_spark.audio import _seed64, synth_pcm, wav_encode
-        from jsschema_spark.flac import flac_encode
-
-        sr = 16000
-        for pdf in batches:
-            cids, codecs, payloads = [], [], []
-            for cid, k, d in zip(pdf["clip_id"], pdf["kind"], pdf["dur_ms"]):
-                k = int(k)
-                n = sr * int(d) // 1000
-                pcm = synth_pcm(cid, sr, n).copy()
-                if k == 2:
-                    rng = np.random.default_rng(_seed64(cid, "noise"))
-                    pcm = np.clip(
-                        pcm.astype(np.int32)
-                        + rng.integers(-16000, 16000, size=n),
-                        -32768, 32767,
-                    ).astype(np.int16)
-                if k == 3:
-                    codec, payload = "pcm_s16le", wav_encode(pcm, sr)
-                elif k == 4:
-                    codec, payload = "opus", b"OggS" + bytes(16)
-                else:
-                    codec, payload = "flac", flac_encode(pcm, sr)
-                    if k == 1:
-                        b = bytearray(payload)
-                        b[len(b) // 2] ^= 0x40
-                        payload = bytes(b)
-                    elif k == 5:
-                        payload = payload[: len(payload) // 2]
-                cids.append(cid)
-                codecs.append(codec)
-                payloads.append(payload)
-            yield _pd.DataFrame(
-                {"clip_id": cids, "codec": codecs, "bytes": payloads}
-            )
-
-    clips = params.mapInPandas(gen, "clip_id string, codec string, bytes binary")
     inv = clips.select(
         "codec",
         codec_invariant_udf("clip_id", "codec", "bytes").alias("__r"),
@@ -3073,53 +3011,31 @@ def q_codec_metadata_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoder. The one Python stage is fixture synthesis; the CHECK itself
     is the production path: a projection that runs on every row at
     10^12-clip scale while decode-stage checks sample."""
-    from jsschema_spark.audio import codec_metadata_check
+    from jsschema_spark.audio import codec_metadata_check, synth_pcm, wav_encode
+    from jsschema_spark.flac import flac_encode
 
-    docs = _clip_params(spark, sf_dir)
+    sr = 16000
+
+    def synth(doc_id, k, d):
+        cid = _CLIP_ID % doc_id
+        pcm = synth_pcm(cid, sr, sr * d // 1000)
+        if k in (0, 2):
+            return cid, "pcm_s16le", wav_encode(pcm, sr), 44100 if k == 2 else sr, d
+        if k in (1, 3):
+            return cid, "flac", flac_encode(pcm, sr), sr, d + 1000 if k == 3 else d
+        if k == 4:
+            return cid, "opus", b"OggS" + bytes(28), sr, d
+        return cid, "pcm_s16le", b"not a riff container at all, just bytes" * 2, sr, d
+
     i = F.col("doc_id")
-    params = docs.select(
-        F.format_string("clip-%012d", i).alias("clip_id"),
-        (i % 6).cast("int").alias("kind"),
-        (F.lit(250) + (i % 4) * 125).cast("int").alias("true_dur"),
-    )
-
-    def gen(batches):
-        import pandas as _pd
-
-        from jsschema_spark.audio import synth_pcm, wav_encode
-        from jsschema_spark.flac import flac_encode
-
-        sr = 16000
-        for pdf in batches:
-            rows = {"clip_id": [], "codec": [], "bytes": [],
-                    "sr_hz": [], "dur_ms": []}
-            for cid, k, d in zip(pdf["clip_id"], pdf["kind"], pdf["true_dur"]):
-                k, d = int(k), int(d)
-                n = sr * d // 1000
-                pcm = synth_pcm(cid, sr, n)
-                codec, payload, sr_claim, dur_claim = "pcm_s16le", None, sr, d
-                if k in (0, 2):
-                    payload = wav_encode(pcm, sr)
-                    if k == 2:
-                        sr_claim = 44100
-                elif k in (1, 3):
-                    codec = "flac"
-                    payload = flac_encode(pcm, sr)
-                    if k == 3:
-                        dur_claim = d + 1000
-                elif k == 4:
-                    codec, payload = "opus", b"OggS" + bytes(28)
-                else:
-                    payload = b"not a riff container at all, just bytes" * 2
-                rows["clip_id"].append(cid)
-                rows["codec"].append(codec)
-                rows["bytes"].append(payload)
-                rows["sr_hz"].append(sr_claim)
-                rows["dur_ms"].append(dur_claim)
-            yield _pd.DataFrame(rows)
-
-    clips = params.mapInPandas(
-        gen, "clip_id string, codec string, bytes binary, sr_hz int, dur_ms int"
+    clips = _synth_clips(
+        spark, sf_dir,
+        [
+            (i % 6).cast("int").alias("kind"),
+            (F.lit(250) + (i % 4) * 125).cast("int").alias("true_dur"),
+        ],
+        synth, _tuples,
+        "clip_id string, codec string, bytes binary, sr_hz int, dur_ms int",
     )
     out = codec_metadata_check(clips)
     return out.groupBy("meta_status").agg(
@@ -3143,73 +3059,50 @@ def q_resample_invariant_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid of the polyphase form bit-for-bit. Scale shape: one Arrow-batched
     Python stage (constant work per output sample regardless of ratio) +
     one tiny groupBy."""
-    docs = _clip_params(spark, sf_dir)
-    i = F.col("doc_id")
-    params = docs.select(
-        (i % 5).cast("int").alias("kind"),
-        (F.lit(300) + (i % 3) * 200).cast("int").alias("freq_hz"),
-        (F.lit(250) + (i % 4) * 125).cast("int").alias("dur_ms"),
-        i.alias("doc_id"),
-    )
+    import numpy as np
 
-    def gen(batches):
-        import numpy as np
-        import pandas as _pd
+    from jsschema_spark.audio import resample_sinc
 
-        from jsschema_spark.audio import resample_sinc
+    target = 16000
+    amp = 8000.0
 
-        target = 16000
-        amp = 8000.0
+    def tone(f, sr, n):
+        return np.clip(
+            np.rint(amp * np.sin(2.0 * np.pi * f * np.arange(n) / sr)),
+            -32768, 32767,
+        ).astype(np.int16)
 
-        def tone(f, sr, n):
-            return np.clip(
-                np.rint(amp * np.sin(2.0 * np.pi * f * np.arange(n) / sr)),
+    def synth(doc_id, k, f_hz, d):
+        sr_in = {0: 8000, 1: 44100, 2: 16000, 3: 8000, 4: 8000}[k]
+        n_in = sr_in * d // 1000
+        if k == 4:
+            return "silent", len(resample_sinc(np.zeros(n_in, dtype=np.int16), sr_in, target))
+        x = tone(float(f_hz), sr_in, n_in)
+        if k == 3:
+            rng = np.random.default_rng(doc_id)
+            x = np.clip(
+                x.astype(np.int32) + rng.integers(-6000, 6000, size=n_in),
                 -32768, 32767,
             ).astype(np.int16)
+        y = resample_sinc(x, sr_in, target)
+        if k == 2:
+            return "passthrough" if np.array_equal(y, x) else "resampled_fail", len(y)
+        ref = amp * np.sin(2.0 * np.pi * f_hz * np.arange(len(y)) / target)
+        sl = slice(200, len(y) - 200)
+        e = y[sl].astype(np.float64) - ref[sl]
+        snr = 10.0 * np.log10(float(np.dot(ref[sl], ref[sl])) / max(float(np.dot(e, e)), 1e-12))
+        return "resampled_pass" if snr >= 40.0 else "resampled_fail", len(y)
 
-        for pdf in batches:
-            statuses, n_outs = [], []
-            for doc_id, k, f_hz, d in zip(
-                pdf["doc_id"], pdf["kind"], pdf["freq_hz"], pdf["dur_ms"]
-            ):
-                k, f_hz, d = int(k), float(f_hz), int(d)
-                sr_in = {0: 8000, 1: 44100, 2: 16000, 3: 8000, 4: 8000}[k]
-                n_in = sr_in * d // 1000
-                if k == 4:
-                    x = np.zeros(n_in, dtype=np.int16)
-                else:
-                    x = tone(f_hz, sr_in, n_in)
-                    if k == 3:
-                        rng = np.random.default_rng(int(doc_id))
-                        x = np.clip(
-                            x.astype(np.int32)
-                            + rng.integers(-6000, 6000, size=n_in),
-                            -32768, 32767,
-                        ).astype(np.int16)
-                y = resample_sinc(x, sr_in, target)
-                n_outs.append(len(y))
-                if k == 4:
-                    statuses.append("silent")
-                    continue
-                if k == 2:
-                    statuses.append(
-                        "passthrough" if np.array_equal(y, x) else "resampled_fail"
-                    )
-                    continue
-                ref = amp * np.sin(
-                    2.0 * np.pi * f_hz * np.arange(len(y)) / target
-                )
-                sl = slice(200, len(y) - 200)
-                e = y[sl].astype(np.float64) - ref[sl]
-                p_sig = float(np.dot(ref[sl], ref[sl]))
-                p_err = float(np.dot(e, e))
-                snr = 10.0 * np.log10(p_sig / max(p_err, 1e-12))
-                statuses.append(
-                    "resampled_pass" if snr >= 40.0 else "resampled_fail"
-                )
-            yield _pd.DataFrame({"status": statuses, "n_out": n_outs})
-
-    feats = params.mapInPandas(gen, "status string, n_out long")
+    i = F.col("doc_id")
+    feats = _synth_clips(
+        spark, sf_dir,
+        [
+            (i % 5).cast("int").alias("kind"),
+            (F.lit(300) + (i % 3) * 200).cast("int").alias("freq_hz"),
+            (F.lit(250) + (i % 4) * 125).cast("int").alias("dur_ms"),
+        ],
+        synth, _tuples, "status string, n_out long",
+    )
     return feats.groupBy("status").agg(
         F.count(F.lit(1)).cast("long").alias("n_clips"),
         F.sum("n_out").cast("long").alias("sum_out_samples"),
@@ -3227,59 +3120,45 @@ def q_flac_transcode_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform noise (the encoder's verbatim floor + frame overhead), so the
     oracle pins the compression behavior class-by-class, not just the
     round-trip. One Arrow-batched Python stage, one tiny groupBy."""
-    docs = _clip_params(spark, sf_dir)
+    import numpy as np
+
+    from jsschema_spark.audio import transcode_payload, wav_decode, wav_encode
+    from jsschema_spark.flac import flac_decode
+
+    def synth(doc_id, k, d):
+        sr = {0: 8000, 1: 16000, 2: 44100, 3: 16000}[k]
+        n = sr * d // 1000
+        if k == 3:
+            wav = b"certainly not a riff container" * 3
+        elif k == 0:
+            t = np.arange(n, dtype=np.float64) / sr
+            wav = wav_encode((9000.0 * np.sin(2.0 * np.pi * 330.0 * t)).astype(np.int16), sr)
+        elif k == 1:
+            rng = np.random.default_rng(doc_id)
+            wav = wav_encode(rng.integers(-32768, 32768, n).astype(np.int16), sr)
+        else:
+            wav = wav_encode(np.zeros(n, dtype=np.int16), sr)
+        try:
+            flac = transcode_payload("pcm_s16le", "flac", wav)
+            back = transcode_payload("flac", "pcm_s16le", flac)
+            exact = np.array_equal(wav_decode(wav)[1], wav_decode(back)[1])
+            return (
+                "transcoded_exact" if exact else "transcode_mismatch",
+                len(flac) < len(wav),
+                len(flac_decode(flac)[1]),
+            )
+        except (ValueError, TypeError):
+            return "quarantined", False, 0
+
     i = F.col("doc_id")
-    params = docs.select(
-        (i % 4).cast("int").alias("kind"),
-        (F.lit(250) + (i % 4) * 125).cast("int").alias("dur_ms"),
-        i.alias("doc_id"),
+    feats = _synth_clips(
+        spark, sf_dir,
+        [
+            (i % 4).cast("int").alias("kind"),
+            (F.lit(250) + (i % 4) * 125).cast("int").alias("dur_ms"),
+        ],
+        synth, _tuples, "status string, compressed boolean, n_samples long",
     )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as _pd
-
-        from jsschema_spark.audio import transcode_payload, wav_decode, wav_encode
-        from jsschema_spark.flac import flac_decode
-
-        for pdf in batches:
-            out = {"status": [], "compressed": [], "n_samples": []}
-            for doc_id, k, d in zip(pdf["doc_id"], pdf["kind"], pdf["dur_ms"]):
-                k, d = int(k), int(d)
-                sr = {0: 8000, 1: 16000, 2: 44100, 3: 16000}[k]
-                n = sr * d // 1000
-                if k == 3:
-                    wav = b"certainly not a riff container" * 3
-                elif k == 0:
-                    t = np.arange(n, dtype=np.float64) / sr
-                    wav = wav_encode(
-                        (9000.0 * np.sin(2.0 * np.pi * 330.0 * t)).astype(np.int16), sr
-                    )
-                elif k == 1:
-                    rng = np.random.default_rng(int(doc_id))
-                    wav = wav_encode(
-                        rng.integers(-32768, 32768, n).astype(np.int16), sr
-                    )
-                else:
-                    wav = wav_encode(np.zeros(n, dtype=np.int16), sr)
-                try:
-                    flac = transcode_payload("pcm_s16le", "flac", wav)
-                    back = transcode_payload("flac", "pcm_s16le", flac)
-                    _, p0 = wav_decode(wav)
-                    _, p1 = wav_decode(back)
-                    exact = np.array_equal(p0, p1)
-                    out["status"].append(
-                        "transcoded_exact" if exact else "transcode_mismatch"
-                    )
-                    out["compressed"].append(len(flac) < len(wav))
-                    out["n_samples"].append(len(flac_decode(flac)[1]))
-                except (ValueError, TypeError):
-                    out["status"].append("quarantined")
-                    out["compressed"].append(False)
-                    out["n_samples"].append(0)
-            yield _pd.DataFrame(out)
-
-    feats = params.mapInPandas(gen, "status string, compressed boolean, n_samples long")
     return feats.groupBy("status", "compressed").agg(
         F.count(F.lit(1)).cast("long").alias("n_clips"),
         F.sum("n_samples").cast("long").alias("sum_samples"),
@@ -3297,50 +3176,34 @@ def q_opus_header_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     a wrong OpusHead version. The oracle pins per-status counts plus
     sum(input_sr) and sum(pre_skip) — certifying the little-endian
     16/32-bit field extraction bit-for-bit."""
+    import struct
+
     from jsschema_spark.audio import opus_header_probe
 
-    docs = _clip_params(spark, sf_dir)
-    i = F.col("doc_id")
-    params = docs.select(
-        (i % 4).cast("int").alias("kind"),
-        i.alias("doc_id"),
-    )
+    def page(input_sr, version=1):
+        pkt = (
+            b"OpusHead" + bytes([version, 1])
+            + struct.pack("<H", 312)
+            + struct.pack("<I", input_sr)
+            + struct.pack("<h", 0) + bytes([0])
+        )
+        return (
+            b"OggS" + bytes([0, 2]) + bytes(8)
+            + struct.pack("<I", 7) + struct.pack("<I", 0) + bytes(4)
+            + bytes([1, len(pkt)]) + pkt
+        )
 
-    def gen(batches):
-        import struct as _struct
+    def synth(doc_id, k):
+        if k == 1:
+            return page(48000)
+        if k == 2:
+            return page(16000)[:30]
+        return page(16000, version=2 if k == 3 else 1)
 
-        import pandas as _pd
-
-        def page(input_sr, version=1):
-            pkt = (
-                b"OpusHead" + bytes([version, 1])
-                + _struct.pack("<H", 312)
-                + _struct.pack("<I", input_sr)
-                + _struct.pack("<h", 0) + bytes([0])
-            )
-            return (
-                b"OggS" + bytes([0, 2]) + bytes(8)
-                + _struct.pack("<I", 7) + _struct.pack("<I", 0) + bytes(4)
-                + bytes([1, len(pkt)]) + pkt
-            )
-
-        for pdf in batches:
-            payloads = []
-            for k in pdf["kind"]:
-                k = int(k)
-                if k == 0:
-                    payloads.append(page(16000))
-                elif k == 1:
-                    payloads.append(page(48000))
-                elif k == 2:
-                    payloads.append(page(16000)[:30])
-                else:
-                    payloads.append(page(16000, version=2))
-            yield _pd.DataFrame({"bytes": payloads})
-
-    clips = params.mapInPandas(gen, "bytes binary").withColumn(
-        "sr_hz", F.lit(16000)
-    )
+    clips = _synth_clips(
+        spark, sf_dir, [(F.col("doc_id") % 4).cast("int").alias("kind")],
+        synth, _tuples, "bytes binary",
+    ).withColumn("sr_hz", F.lit(16000))
     out = opus_header_probe(clips)
     return out.groupBy("opus_status").agg(
         F.count(F.lit(1)).cast("long").alias("n_clips"),
@@ -3616,46 +3479,28 @@ def q_crest_check_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise (~12 dB, natural dynamics), silence, garbage — each class
     arithmetically determined by doc_id, classified from the one-pass
     PCM profile."""
-    from jsschema_spark.audio import _profile_rows, crest_check, wav_encode
+    import numpy as np
 
-    docs = _clip_params(spark, sf_dir)
-    params = docs.select(
-        "doc_id", (F.col("doc_id") % 4).cast("int").alias("kind")
-    )
+    from jsschema_spark.audio import PROFILE_ROW_SCHEMA, _profile_rows, crest_check, wav_encode
 
-    def gen(batches):
-        import numpy as np
+    sr = 16000
+    n = sr // 2
+    t = np.arange(n, dtype=np.float64) / sr
+    square = wav_encode((8000 * np.sign(np.sin(2 * np.pi * 440 * t))).astype(np.int16), sr)
+    silence = wav_encode(np.zeros(n, dtype=np.int16), sr)
 
-        sr = 16000
-        n = sr // 2
-        t = np.arange(n, dtype=np.float64) / sr
-        square = (8000 * np.sign(np.sin(2 * np.pi * 440 * t))).astype(np.int16)
-        zeros = np.zeros(n, dtype=np.int16)
-        for pdf in batches:
-            payloads = []
-            for doc_id, k in zip(pdf["doc_id"], pdf["kind"]):
-                if k == 0:
-                    payloads.append(wav_encode(square, sr))
-                elif k == 1:
-                    rng = np.random.default_rng(int(doc_id))
-                    payloads.append(
-                        wav_encode(
-                            np.clip(rng.normal(0, 3000, n), -32768, 32767).astype(
-                                np.int16
-                            ),
-                            sr,
-                        )
-                    )
-                elif k == 2:
-                    payloads.append(wav_encode(zeros, sr))
-                else:
-                    payloads.append(b"corrupt")
-            yield _profile_rows([str(d) for d in pdf["doc_id"]], payloads)
+    def synth(doc_id, k):
+        if k == 0:
+            return square
+        if k == 1:
+            noise = np.random.default_rng(doc_id).normal(0, 3000, n)
+            return wav_encode(np.clip(noise, -32768, 32767).astype(np.int16), sr)
+        return silence if k == 2 else b"corrupt"
 
-    feats = params.mapInPandas(
-        gen,
-        "clip_id string, decode_ok boolean, sr_hz int, n_samples int, "
-        "rms_dbfs double, peak int, clip_frac double, dc_offset double",
+    feats = _synth_clips(
+        spark, sf_dir, [(F.col("doc_id") % 4).cast("int").alias("kind")],
+        synth, lambda pdf, outs: _profile_rows(pdf["clip_id"], outs),
+        PROFILE_ROW_SCHEMA,
     )
     out = crest_check(feats)
     return out.groupBy("crest_status").agg(

@@ -1407,6 +1407,38 @@ def resample_sinc(
     return np.clip(np.rint(out), -32768, 32767).astype(np.int16)
 
 
+NORMALIZE_ROW_SCHEMA = T.StructType(
+    [
+        T.StructField("clip_id", T.StringType()),
+        T.StructField("bytes", T.BinaryType()),
+        T.StructField("sr_hz", T.IntegerType()),
+        T.StructField("n_samples", T.IntegerType()),
+        T.StructField("decode_ok", T.BooleanType()),
+    ]
+)
+
+
+def _normalize_rows(cids, payloads, resample, target_sr, target_dbfs) -> pd.DataFrame:
+    """decode → ``resample`` → ``normalize_gain`` → re-encode, per clip."""
+    out = {"clip_id": [], "bytes": [], "sr_hz": [], "n_samples": [], "decode_ok": []}
+    for cid, payload in zip(cids, payloads):
+        out["clip_id"].append(cid)
+        try:
+            sr, pcm = wav_decode(payload)
+            pcm = resample(pcm, sr, target_sr)
+            pcm = normalize_gain(pcm, target_dbfs)
+            out["bytes"].append(wav_encode(pcm, target_sr))
+            out["sr_hz"].append(target_sr)
+            out["n_samples"].append(len(pcm))
+            out["decode_ok"].append(True)
+        except (ValueError, TypeError):
+            out["bytes"].append(None)
+            out["sr_hz"].append(0)
+            out["n_samples"].append(0)
+            out["decode_ok"].append(False)
+    return pd.DataFrame(out)
+
+
 def audio_normalize_scan(
     spark,
     parquet_dir: str,
@@ -1417,50 +1449,23 @@ def audio_normalize_scan(
     resampler: str = "linear",
 ):
     """Corpus normalization TRANSFORM (the fix-path sibling of the audio
-    gates): decode → resample to ``target_sr`` → gain-normalize to
-    ``target_dbfs`` → re-encode, file-granular (``_file_scan``). Output
-    rows: ``clip_id, bytes (normalized WAV), sr_hz, n_samples,
-    decode_ok`` — undecodable clips pass through with null bytes so the
-    caller can route them to quarantine instead of silently dropping
-    them. ``resampler``: ``"linear"`` (default — kept for bit-stable
-    parity with the existing oracle) or ``"sinc"`` (the band-limited
-    polyphase kernel, ``resample_sinc`` — ≥53 dB vs ~40 dB on
-    true-interpolation legs, same ⌊n·L/M⌋ output grid, a few × the
+    gates): ``_normalize_rows`` over a parquet directory, file-granular
+    (``_file_scan``). Output rows: ``clip_id, bytes (normalized WAV),
+    sr_hz, n_samples, decode_ok`` — undecodable clips pass through with
+    null bytes so the caller can route them to quarantine instead of
+    silently dropping them. ``resampler``: ``"linear"`` (default — kept
+    for bit-stable parity with the existing oracle) or ``"sinc"`` (the
+    band-limited polyphase kernel, ``resample_sinc`` — ≥53 dB vs ~40 dB
+    on true-interpolation legs, same ⌊n·L/M⌋ output grid, a few × the
     per-sample cost)."""
     if resampler not in ("linear", "sinc"):
         raise ValueError(f"unknown resampler: {resampler!r}")
     resample = resample_sinc if resampler == "sinc" else resample_linear
 
-    out_schema = T.StructType(
-        [
-            T.StructField("clip_id", T.StringType()),
-            T.StructField("bytes", T.BinaryType()),
-            T.StructField("sr_hz", T.IntegerType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("decode_ok", T.BooleanType()),
-        ]
-    )
-
     def rows(cids, payloads) -> pd.DataFrame:
-        out = {"clip_id": [], "bytes": [], "sr_hz": [], "n_samples": [], "decode_ok": []}
-        for cid, payload in zip(cids, payloads):
-            out["clip_id"].append(cid)
-            try:
-                sr, pcm = wav_decode(payload)
-                pcm = resample(pcm, sr, target_sr)
-                pcm = normalize_gain(pcm, target_dbfs)
-                out["bytes"].append(wav_encode(pcm, target_sr))
-                out["sr_hz"].append(target_sr)
-                out["n_samples"].append(len(pcm))
-                out["decode_ok"].append(True)
-            except (ValueError, TypeError):
-                out["bytes"].append(None)
-                out["sr_hz"].append(0)
-                out["n_samples"].append(0)
-                out["decode_ok"].append(False)
-        return pd.DataFrame(out)
+        return _normalize_rows(cids, payloads, resample, target_sr, target_dbfs)
 
-    return _file_scan(spark, parquet_dir, rows, out_schema, clip_id_col, bytes_col)
+    return _file_scan(spark, parquet_dir, rows, NORMALIZE_ROW_SCHEMA, clip_id_col, bytes_col)
 
 
 def xcorr_offset(

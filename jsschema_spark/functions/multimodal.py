@@ -248,20 +248,3 @@ def image_metadata(df: DataFrame, payload_col: str) -> DataFrame:
             F.length(F.col(payload_col)).cast("long").alias("size_bytes"),
         ),
     )
-
-
-def media_metadata(df: DataFrame, payload_col: str, media_type: str, fmt: str) -> DataFrame:
-    """Attach a typed metadata struct derived from the payload envelope
-    (sizes are real; pixel dims need the stubbed decoder ⇒ null)."""
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.lit(fmt).alias("format"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("n_frames"),
-            F.lit(None).cast("int").alias("sample_rate"),
-            F.length(F.col(payload_col)).cast("long").alias("size_bytes"),
-        ),
-    )

@@ -269,12 +269,6 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     return F.array_distinct(F.filter(sh, lambda x: x.isNotNull()))
 
 
-def rolling_fingerprint(text: Column, k: int = 3) -> Column:
-    """Min-of-shingle-hashes fingerprint (1-permutation minhash): a compact
-    near-dup signal — equal fingerprints ⇒ likely near-duplicates."""
-    return F.array_min(F.transform(word_shingles(text, k), F.xxhash64))
-
-
 # --------------------------------------------------------------------------
 # corpus vocabulary / n-gram statistics
 

@@ -5,7 +5,11 @@ Python/Arrow stages, join strategies, whether scans carry pushed filters
 — plus flags for the anti-patterns (CartesianProduct, row-at-a-time
 BatchEvalPython). Writes BENCH/PLAN_AUDIT.md.
 
+The session is ``session.build_session``'s, so the audited plans are the
+ones the engine runs.
+
 Run: python scripts/plan_audit.py [sf_dir]
+Env: SPARK_GRAFT_CPUS (default: the machine's CPU count).
 """
 
 from __future__ import annotations
@@ -20,20 +24,18 @@ def main() -> None:
     sys.path.insert(0, repo)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry_mod
+    from jsschema_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.driver.memory", "8g")
-        .config(
-            "spark.executorEnv.PYTHONPATH",
-            os.pathsep.join(p for p in [repo, os.environ.get("PYTHONPATH", "")] if p),
-        )
-        .getOrCreate()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    spark = build_session(
+        app_name="plan-audit", master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
+        extra_conf={
+            "spark.executorEnv.PYTHONPATH": os.pathsep.join(
+                p for p in [repo, os.environ.get("PYTHONPATH", "")] if p
+            ),
+        },
     )
     try:
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

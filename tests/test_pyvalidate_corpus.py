@@ -85,6 +85,8 @@ def test_negative_cache():
         res.resolve("#/definitions/nope")
     except ResolutionError as e:
         assert res._cache["#/definitions/nope"] is e
+    else:
+        _pt.fail("second resolve did not raise")
 
 
 def test_metaschema_validates_itself():
